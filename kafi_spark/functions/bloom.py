@@ -37,6 +37,7 @@ import math
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .portable import md5_long
+from .state import load_deltas, save_delta
 
 
 def bloom_params(n_items: int, fp_rate: float = 0.01) -> tuple[int, int]:
@@ -241,8 +242,6 @@ def bloom_save_delta(bloom: DataFrame, state_dir: str, version: int | str) -> No
     union+``bit_or`` (the filter algebra is an idempotent commutative
     monoid, so replay order never matters). Shared discipline:
     :mod:`kafi_spark.functions.state`."""
-    from kafi_spark.functions.state import save_delta
-
     save_delta(bloom, state_dir, version)
 
 
@@ -257,8 +256,6 @@ def bloom_load_state(spark, state_dir: str, exclude_version=None) -> DataFrame:
     partition directory name): a replaying streaming epoch passes its
     OWN version so the state it sees is exactly the pre-epoch state and
     the replayed emission is byte-identical to the first attempt."""
-    from kafi_spark.functions.state import load_deltas
-
     # explicit read schema: state dirs persisted before the round-7
     # word_idx int→long widening hold int32 files next to int64 ones;
     # footer-sampled inference would mis-type or fail on the mix, the

@@ -54,6 +54,9 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from kafi_spark.functions.state import (
+    compact_fold, load_deltas, save_delta, watermark_paths)
+
 # Spark's hll_sketch_agg supports lgConfigK in [4, 21]; 12 ≈ 1.6% RSE
 # at 16 KiB max sketch size — the DataSketches default.
 _DEFAULT_LGK = 12
@@ -144,8 +147,6 @@ def sketch_save_delta(
     union is register-wise max — an idempotent commutative monoid, the
     same algebra as :func:`bloom.bloom_save_delta`'s bit_or — merging a
     delta twice or in any order never changes the merged state."""
-    from kafi_spark.functions.state import save_delta
-
     save_delta(sketches, state_dir, version)
 
 
@@ -186,8 +187,8 @@ def sketch_totals(
     ``lgk`` for theta state persisted above the default precision —
     the union cap otherwise downsamples it (see :func:`_merge_for`)."""
     merge_fn, est_fn = _merge_for(kind, lgk)
-    df = spark.read.parquet(state_dir)
-    merged = merge_fn(df, group_cols, sketch_col=sketch_col)
+    merged = merge_fn(load_deltas(spark, state_dir), group_cols,
+                      sketch_col=sketch_col)
     return merged.withColumn("distinct_est", est_fn(F.col(sketch_col)))
 
 
@@ -213,7 +214,7 @@ def sketch_compact(
     delete old ``v=`` dirs at leisure."""
     merge_fn, _ = _merge_for(kind, lgk)
     merged = merge_fn(
-        spark.read.parquet(state_dir), group_cols, sketch_col=sketch_col
+        load_deltas(spark, state_dir), group_cols, sketch_col=sketch_col
     ).localCheckpoint()
     sketch_save_delta(merged, state_dir, f"compact-{version}")
 
@@ -519,8 +520,6 @@ def kll_save_delta(
     (a retried streaming epoch replaces its own directory), which is the
     ONLY idempotence KLL state gets: each input row lands in exactly one
     epoch directory, and every directory is merged exactly once."""
-    from kafi_spark.functions.state import save_delta
-
     # raise early on anything whose str() the watermark readers can't
     # parse back (round-8 review: int(2.5) passed this guard but wrote
     # v=2.5, permanently poisoning every later read/compaction of the
@@ -535,16 +534,6 @@ def kll_save_delta(
             "watermark fence)"
         )
     save_delta(sketches, state_dir, epoch)
-
-
-def _kll_state_dirs(state_dir: str, spark=None):
-    """(best_compact_epoch_or_None, compact_path_or_None, live_epochs):
-    the shared fenced-state listing — see
-    :func:`kafi_spark.functions.state.committed_dirs`. ``spark`` is
-    required for ``scheme://`` state dirs (Hadoop listings)."""
-    from kafi_spark.functions.state import committed_dirs
-
-    return committed_dirs(state_dir, spark)
 
 
 def kll_totals(
@@ -564,27 +553,11 @@ def kll_totals(
     can be deleted at leisure), so compaction needs no coordination
     with readers and a crash mid-compaction (no ``_SUCCESS``) leaves
     the previous watermark in force."""
-    _, compact_path, live = _kll_state_dirs(state_dir, spark)
-    paths = ([compact_path] if compact_path else []) + live
+    paths = watermark_paths(state_dir, spark=spark)
     if not paths:
         raise FileNotFoundError(f"no committed KLL deltas in {state_dir}")
     df = spark.read.parquet(*paths)
     return quantile_merge(df, group_cols, dtype, k, sketch_col)
-
-
-def _additive_state_compact(spark, state_dir: str, merge_fn, prune: bool) -> int:
-    """Shared compaction for ADDITIVE sketch state (KLL, CMS): one
-    directory listing supplies both the watermark and the exact delta
-    paths folded. Folding via a second listing (e.g. calling the
-    totals reader) would race a concurrently-committed stream epoch:
-    an epoch landing between the two listings gets folded into
-    ``compact-N`` with N < epoch and then ALSO read as a live delta by
-    every subsequent read — double-counted forever, because additive
-    merge does not forgive it. Returns the watermark (newest folded
-    epoch), or the existing one if there is nothing live to fold."""
-    from kafi_spark.functions.state import compact_fold
-
-    return compact_fold(spark, state_dir, merge_fn, prune)
 
 
 def kll_compact(
@@ -601,13 +574,13 @@ def kll_compact(
 
     Crash-safe without relying on idempotence: ONE directory listing
     supplies both the watermark AND the exact delta paths folded (see
-    :func:`_additive_state_compact` — re-listing inside the fold races
-    a concurrent stream epoch), the fold is written with Spark's normal
-    ``_SUCCESS`` commit, and becomes the read watermark only once
-    committed. ``prune=True`` afterwards deletes the superseded epoch
+    :func:`~kafi_spark.functions.state.compact_fold` — re-listing
+    inside the fold races a concurrent stream epoch), the fold is
+    written with Spark's normal ``_SUCCESS`` commit, and becomes the
+    read watermark only once committed. ``prune=True`` afterwards deletes the superseded epoch
     dirs and older compacts — safe at leisure because readers already
     ignore everything ≤ N. Returns N."""
-    return _additive_state_compact(
+    return compact_fold(
         spark, state_dir,
         lambda df: quantile_merge(df, group_cols, dtype, k, sketch_col),
         prune)
@@ -803,8 +776,7 @@ def cms_totals(
     (saved via :func:`kll_save_delta` — numeric epochs). Reads the
     newest committed ``v=compact-<N>`` plus epochs > N only; same
     crash-safety argument as :func:`kll_totals`."""
-    _, compact_path, live = _kll_state_dirs(state_dir, spark)
-    paths = ([compact_path] if compact_path else []) + live
+    paths = watermark_paths(state_dir, spark=spark)
     if not paths:
         raise FileNotFoundError(f"no committed CMS deltas in {state_dir}")
     return cms_merge(spark.read.parquet(*paths), group_cols)
@@ -818,7 +790,6 @@ def cms_compact(
 ) -> int:
     """Fold CMS state into ``v=compact-<N>`` (N = newest live epoch);
     additive-state compaction with the same committed-watermark and
-    single-listing crash/race safety as :func:`kll_compact`
-    (:func:`_additive_state_compact`). Returns N."""
-    return _additive_state_compact(
+    single-listing crash/race safety as :func:`kll_compact`. Returns N."""
+    return compact_fold(
         spark, state_dir, lambda df: cms_merge(df, group_cols), prune)

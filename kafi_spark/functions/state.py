@@ -1,13 +1,14 @@
-"""Shared versioned-delta discipline for persisted streaming state.
+"""Versioned-delta storage for persisted streaming state.
 
-Three state families hand-rolled the same machinery before round 7 —
-Bloom filters (:mod:`kafi_spark.functions.bloom`), KLL/CMS sketch folds
-(:mod:`kafi_spark.functions.sketches`), and the incremental-dedup
-band-key epochs (:mod:`kafi_spark.streaming.stateful`): ``v=<version>``
-delta directories, idempotent per-version overwrite, ``_SUCCESS``
-commit fences, own-epoch exclusion on crash replay, and watermark
-compaction. This module is that machinery, once; the families keep
-their public APIs and call here.
+Every persisted state family in the repo stores itself here: Bloom
+filters (:mod:`kafi_spark.functions.bloom`), HLL/theta and KLL/CMS
+sketches (:mod:`kafi_spark.functions.sketches`), and the fingerprint,
+band-key and document sets of the ``foreachBatch`` twins
+(:mod:`kafi_spark.streaming.stateful`, whose module docstring states the
+per-epoch protocol built on these helpers). A family is a directory of
+``v=<version>`` deltas, each an idempotent per-version overwrite fenced
+by Spark's ``_SUCCESS`` marker, optionally folded into
+``v=compact-<N>``. :func:`_deltas` is the one parser of that layout.
 
 Two disciplines, chosen by the state's MERGE ALGEBRA:
 
@@ -27,10 +28,8 @@ Two disciplines, chosen by the state's MERGE ALGEBRA:
   :func:`committed_dirs` / :func:`watermark_paths`; compactor:
   :func:`compact_fold`.
 
-Both disciplines share :func:`save_delta`: writes are idempotent
-per-version overwrites, so a retried streaming epoch replaces its own
-directory instead of double-merging, and Spark's ``_SUCCESS`` marker is
-the commit fence — a crashed write is invisible to the fenced readers.
+Both disciplines write through :func:`save_delta`; a crashed write has
+no ``_SUCCESS`` and stays invisible to the fenced readers.
 
 At 100 TB these state directories are index-scale, not corpus-scale
 (fingerprints, band keys, fixed-size sketch rows); every reader here
@@ -123,48 +122,55 @@ def _io(state_dir: str, spark=None):
     return io_for(spark, state_dir)
 
 
-def _epoch_int(tag: str, state_dir: str) -> int:
-    """Parse a live-epoch tag, failing with a NAMED cause: a stray
-    non-numeric delta (e.g. a float epoch that slipped past a lax
-    guard) otherwise poisons every subsequent read and compaction of
-    the directory with a bare ValueError (round-8 review)."""
-    try:
-        return int(tag)
-    except ValueError:
-        raise ValueError(
-            f"additive state dir {state_dir} holds non-numeric epoch "
-            f"delta 'v={tag}': additive reads are watermark-fenced on "
-            "integer epochs — remove or rename that delta"
-        ) from None
+def _deltas(state_dir: str, spark=None, committed: bool = True):
+    """Yield ``(path, tag, epoch, is_compact)`` for every ``v=<tag>``
+    entry of ``state_dir`` — the one parser of the delta layout.
+    ``epoch`` is the integer in ``<tag>`` or ``compact-<tag>``, or None
+    when it does not parse (a ``version_prefix`` lineage, a stray
+    float); each caller decides what None means. ``committed`` skips
+    entries without ``_SUCCESS`` (a crashed write, or a stray file
+    named ``v=…``). Raises FileNotFoundError when ``state_dir`` is
+    absent."""
+    io = _io(state_dir, spark)
+    if not io.exists(state_dir):
+        raise FileNotFoundError(f"no state at {state_dir}")
+    for name in io.listdir(state_dir):
+        if not name.startswith("v="):
+            continue
+        path = io.join(state_dir, name)
+        if committed and not io.exists(io.join(path, "_SUCCESS")):
+            continue
+        tag = name[2:]
+        is_compact = tag.startswith("compact-")
+        try:
+            epoch = int(tag[len("compact-"):] if is_compact else tag)
+        except ValueError:
+            epoch = None
+        yield path, tag, epoch, is_compact
 
 
 def committed_dirs(state_dir: str, spark=None):
     """(watermark_or_None, compact_path_or_None, live_epoch_paths) for
     additive state: the newest COMMITTED ``v=compact-<N>`` fold and the
-    numeric epoch deltas NEWER than N. Dirs without ``_SUCCESS`` are
-    ignored — a crashed write/compaction is invisible rather than
-    double-counted or half-read (the fence also skips stray FILES named
-    ``v=…``). Raises FileNotFoundError when the state dir itself is
-    absent (callers decide what "no state" means). ``spark`` is only
-    needed for ``scheme://`` state dirs (Hadoop FileSystem listings);
-    plain paths list through ``os``."""
-    io = _io(state_dir, spark)
+    numeric epoch deltas NEWER than N. Uncommitted dirs are ignored — a
+    crashed write/compaction is invisible rather than double-counted or
+    half-read — and a non-numeric committed tag raises a ValueError
+    naming it: additive reads are fenced on integer epochs. Raises
+    FileNotFoundError when the state dir itself is absent (callers
+    decide what "no state" means). ``spark`` is only needed for
+    ``scheme://`` state dirs (Hadoop FileSystem listings); plain paths
+    list through ``os``."""
     best_n, best_path, epochs = None, None, []
-    if not io.exists(state_dir):
-        raise FileNotFoundError(f"no state at {state_dir}")
-    for name in io.listdir(state_dir):
-        path = io.join(state_dir, name)
-        if not name.startswith("v="):
-            continue
-        if not io.exists(io.join(path, "_SUCCESS")):
-            continue  # uncommitted write (or a stray file): ignore
-        tag = name[2:]
-        if tag.startswith("compact-"):
-            n = _epoch_int(tag[len("compact-"):], state_dir)
-            if best_n is None or n > best_n:
-                best_n, best_path = n, path
-        else:
-            epochs.append((_epoch_int(tag, state_dir), path))
+    for path, tag, n, is_compact in _deltas(state_dir, spark):
+        if n is None:
+            raise ValueError(
+                f"additive state dir {state_dir} holds non-numeric epoch "
+                f"delta 'v={tag}': additive reads are watermark-fenced on "
+                "integer epochs — remove or rename that delta")
+        if not is_compact:
+            epochs.append((n, path))
+        elif best_n is None or n > best_n:
+            best_n, best_path = n, path
     live = [p for e, p in epochs if best_n is None or e > best_n]
     return best_n, best_path, live
 
@@ -179,34 +185,20 @@ def assert_epoch_lineage(state_dir: str, epoch: int, spark=None) -> None:
     restarts at 0, and :func:`save_delta`'s idempotent overwrite would
     then silently replace committed deltas — additive state cannot
     recover a lost delta, and idempotent-set state silently un-sees
-    history (round-9 review; the hazard bloom_dedup_stream documents,
-    now enforced for every numeric-epoch family). A legitimate
-    crash-replay rewrites its OWN epoch — never one below the committed
-    frontier — so monotonicity is exactly the legal envelope. The
-    escape hatches: keep the original checkpoint, start a new
-    state_dir, or (idempotent families) pass a distinct
+    history. A legitimate crash-replay rewrites its OWN epoch — never
+    one below the committed frontier — so monotonicity is exactly the
+    legal envelope. The escape hatches: keep the original checkpoint,
+    start a new state_dir, or (idempotent families) pass a distinct
     ``version_prefix`` so keys stay disjoint.
 
     Only NUMERIC committed tags participate: prefixed versions are a
-    disjoint lineage by construction and must not poison a numeric save
-    (``committed_dirs`` would raise on them, so the listing here is its
-    own tolerant walk)."""
-    io = _io(state_dir, spark)
-    if not io.exists(state_dir):
+    disjoint lineage by construction and are skipped here, where
+    :func:`committed_dirs` would raise on them."""
+    try:
+        newest = max((n for _, _, n, _ in _deltas(state_dir, spark)
+                      if n is not None), default=-1)
+    except FileNotFoundError:
         return
-    newest = -1
-    for name in io.listdir(state_dir):
-        if not name.startswith("v="):
-            continue
-        if not io.exists(io.join(io.join(state_dir, name), "_SUCCESS")):
-            continue  # uncommitted write: invisible, overwrite is fine
-        tag = name[2:]
-        if tag.startswith("compact-"):
-            tag = tag[len("compact-"):]
-        try:
-            newest = max(newest, int(tag))
-        except ValueError:
-            continue  # prefixed lineage — disjoint keys, not fenced
     if newest > int(epoch):
         raise ValueError(
             f"state dir {state_dir} already holds committed epoch "
@@ -261,22 +253,10 @@ def compact_fold(spark, state_dir: str, merge_fn, prune: bool = False) -> int:
 
 def prune_folded(state_dir: str, watermark: int, spark=None) -> None:
     """Delete epoch dirs ≤ watermark and compacts < watermark — the
-    state a committed ``v=compact-<watermark>`` fold supersedes.
-    Tags that don't parse as epochs are left in place (they never enter
-    the fenced read set either)."""
+    state a committed ``v=compact-<watermark>`` fold supersedes,
+    committed or not. Tags that don't parse as epochs are left in place
+    (they never enter the fenced read set either)."""
     io = _io(state_dir, spark)
-    for name in io.listdir(state_dir):
-        path = io.join(state_dir, name)
-        if not name.startswith("v="):
-            continue
-        tag = name[2:]
-        try:
-            folded = (
-                (not tag.startswith("compact-") and int(tag) <= watermark)
-                or (tag.startswith("compact-")
-                    and int(tag[len("compact-"):]) < watermark)
-            )
-        except ValueError:
-            continue
-        if folded:
+    for path, _, n, is_compact in _deltas(state_dir, spark, committed=False):
+        if n is not None and (n < watermark if is_compact else n <= watermark):
             io.delete(path)

@@ -1,4 +1,54 @@
-"""Custom stateful streaming operators — ``applyInPandasWithState``.
+"""Streaming operators: custom stateful windows, and the ``foreachBatch``
+twins of the batch curation and sketch operators.
+
+Two operators keep their state inside Structured Streaming itself:
+:func:`sliding_window_stream` (``applyInPandasWithState``, below) and
+:func:`dedup_exact_stream` (``dropDuplicatesWithinWatermark``). The
+other eleven return a ``foreachBatch`` callable ``(batch_df, epoch_id)``
+whose state outlives the query as versioned parquet deltas
+(:mod:`kafi_spark.functions.state`), and all eleven run one epoch
+protocol, :func:`_epoch_stream`:
+
+1. **Version key.** Epoch ``e`` writes its delta of every state family
+   to ``v=<version_prefix><e>`` (``v=<e>`` for twins without a
+   ``version_prefix``). The write is an idempotent overwrite, so a
+   retried epoch replaces its own delta. Epoch ids are scoped to the
+   query's checkpoint: numeric keys pass
+   :func:`~kafi_spark.functions.state.assert_epoch_lineage`, which
+   refuses to rewrite history under a fresh checkpoint, and a fresh
+   checkpoint on existing state takes a distinct ``version_prefix``.
+2. **Own-epoch exclusion.** A family read before the save is loaded
+   without the epoch's own ``v=<key>``, so a retry sees exactly the
+   pre-epoch state and emits what the first attempt emitted. A
+   fingerprint-set family also refuses a directory whose stored
+   ``__fp`` type is not the twin's, before anything is written.
+3. **Whole-batch deltas.** A delta is a function of the batch and the
+   pre-epoch state only: the set twins save the fingerprints of the
+   whole batch, not just of the rows they emit (a duplicate occurrence
+   still proves its key was seen, however the stream is split into
+   batches); :func:`dedup_against_stream`, whose state is the deduped
+   corpus, saves its survivors.
+4. **Save, then sink.** Every delta is saved before ``sink(out_df,
+   epoch_id)`` is called. The summary twins need that order, since
+   their sink reads totals that include the epoch; the exclusion twins
+   are indifferent, since their load already dropped the epoch. A sink
+   that fails leaves the epoch's deltas behind, and the retry rewrites
+   them with the same rows.
+
+Each family is merged by its algebra:
+
+- **idempotent set** — Bloom bits (``bit_or``), fingerprint sets, and
+  :func:`dedup_against_stream`'s band-key and document sets: re-merging
+  a delta changes nothing; the exclusion twins read these.
+- **idempotent summary** — HLL/theta sketches (register-wise max): the
+  sink reads the union of every delta, the epoch's own included.
+- **additive** — KLL sketches, count-min tables and counter rows:
+  merging a delta twice double-counts, so epochs are numeric, each row
+  lands in exactly one delta, and reads are fenced by the compaction
+  watermark (:func:`~kafi_spark.functions.state.watermark_paths`).
+
+Per-record sliding windows and custom triggers
+----------------------------------------------
 
 The two §2.9 shapes Spark's native windows cannot express (SURVEY
 "what's hard" watch-list):
@@ -11,16 +61,16 @@ The two §2.9 shapes Spark's native windows cannot express (SURVEY
   ``trigger_fun(window_end, watermark)`` over the running max event time
   (topologynode.py:654-666), not by Spark's fixed append-mode rule.
 
-Both are implemented here on one primitive: per-key state =
-(pending events, max event time). Each micro-batch appends the key's new
-events, advances the per-key watermark ``wm = max_ts - lateness``, emits
-every window whose anchor passes ``trigger_fun(anchor_ts + size, wm)``
-with a caller-supplied pandas aggregate over the window's events, then
-evicts events with ``ts + size <= wm`` (no window can contain them any
-more). Emission happens before eviction in the same trigger, so a
-window's members are always still in state when it fires; each window
-fires exactly once (its anchor is evicted by the same threshold that
-fired it).
+Both are implemented on one primitive: per-key state = (pending events,
+max event time). Each micro-batch appends the key's new events,
+advances the per-key watermark ``wm = max_ts - lateness``, emits every
+window whose anchor passes ``trigger_fun(anchor_ts + size, wm)`` with a
+caller-supplied pandas aggregate over the window's events, then evicts
+events with ``ts + size <= wm`` (no window can contain them any more).
+Emission happens before eviction in the same trigger, so a window's
+members are always still in state when it fires; each window fires
+exactly once (its anchor is evicted by the same threshold that fired
+it).
 
 Deviation from the reference, documented: the reference's watermark is
 the *global* max event time of the driving stream; per-key state gives a
@@ -36,11 +86,90 @@ import pickle
 from collections.abc import Callable, Iterator, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window as W, functions as F
 
-from kafi_spark.functions.state import save_delta as _save_delta
+from kafi_spark.functions.bloom import (
+    bloom_build, bloom_contains, bloom_load_state, bloom_new,
+    bloom_save_delta)
+from kafi_spark.functions.contamination import decontaminate
+from kafi_spark.functions.dedup import (
+    _band_keys, _lsh_join_from_bands, _parallelize)
+from kafi_spark.functions.importance import (
+    _band_case_expr, _validate_bands, lm_quality_score)
+from kafi_spark.functions.sketches import (
+    _DEFAULT_LGK, _DEFAULT_THETA_LGK, _kll_dtype_of, _kll_fns,
+    cms_over_time, cms_totals, distinct_over_time, distinct_sketch,
+    kll_save_delta, kll_totals, quantile_sketch, quantile_values,
+    quantiles_over_time, sketch_save_delta, sketch_totals,
+    theta_over_time)
+from kafi_spark.functions.spans import (
+    _cut_marked_grams, _null_doc_leg, _reassemble, _sliding_grams,
+    text_spans)
+from kafi_spark.functions.state import (
+    committed_dirs, load_deltas, save_delta, watermark_paths)
+from kafi_spark.functions.text import text_stats, ws_tokens
 
 _STATE_SCHEMA = "events binary, max_ts long, fired binary"
+
+
+def _epoch_stream(step, sink, state_dir: str = "", families=None,
+                  version_prefix: str = ""):
+    """The epoch protocol of the module docstring as one ``foreachBatch``
+    callable.
+
+    ``families`` maps each state family's subdirectory of ``state_dir``
+    (``""`` for ``state_dir`` itself) to ``(load, save)``:
+    ``load(spark, path, key)`` reads the family without the epoch's own
+    delta (None for a family nothing reads before its save), and
+    ``save(delta, path, key)`` writes the epoch's delta. ``step(batch_df,
+    state)`` receives the loaded families by subdirectory and returns
+    ``(deltas, emit)``: one delta per family, and a thunk that builds
+    the sink's frame, called only after every delta is saved."""
+    families = families or {}
+    root = state_dir.rstrip("/")
+    paths = {fam: f"{root}/{fam}" if fam else root for fam in families}
+
+    def process(batch_df: DataFrame, epoch_id: int) -> None:
+        # an unprefixed key stays the raw epoch id, so the additive
+        # saves validate exactly what the query handed in
+        key = f"{version_prefix}{epoch_id}" if version_prefix else epoch_id
+        spark = batch_df.sparkSession
+        state = {fam: load(spark, paths[fam], key)
+                 for fam, (load, _) in families.items() if load}
+        deltas, emit = step(batch_df, state)
+        for fam, delta in deltas.items():
+            families[fam][1](delta, paths[fam], key)
+        if sink is not None:
+            sink(emit(), epoch_id)
+
+    return process
+
+
+def _fp_set(fp_type: str):
+    """Loader for a fingerprint-set family: the distinct ``__fp`` of
+    every delta but the epoch's own. A directory whose stored ``__fp``
+    type (the footer schema Spark infers at load) is not ``fp_type`` is
+    refused: joining bigint fingerprints against legacy md5 strings
+    never matches, so history would silently re-emit."""
+    def load(spark, path: str, key) -> DataFrame:
+        df = load_deltas(spark, path, key, empty_schema=f"__fp {fp_type}")
+        stored = df.schema["__fp"].dataType.simpleString()
+        if stored != fp_type:
+            raise ValueError(
+                f"fingerprint state {path} stores __fp as {stored}, but "
+                f"this operator writes {fp_type}: the directory was "
+                "written by an incompatible fingerprint scheme — use a "
+                "new state_dir")
+        return df.select("__fp").distinct()
+
+    return load
+
+
+def _committed(spark, path: str, key) -> DataFrame | None:
+    """Loader for a watermark-fenced set family: the committed deltas
+    but the epoch's own, or None while there are none."""
+    dirs = watermark_paths(path, key, spark)
+    return spark.read.parquet(*dirs) if dirs else None
 
 
 def sliding_window_stream(
@@ -195,8 +324,6 @@ def dedup_exact_stream(
     LATER than the watermark horizon are re-admitted (their state is
     gone); choose the horizon accordingly, like any watermarked dedup.
     """
-    from pyspark.sql import functions as F
-
     return (
         df.withColumn(fingerprint_col, F.md5(F.col(text_col)))
         .withWatermark(ts_col, watermark)
@@ -216,51 +343,31 @@ def bloom_dedup_stream(
 ):
     """Cross-batch (and cross-RUN) streaming dedup via persisted Bloom
     state: returns a ``foreachBatch`` callable that, per micro-batch,
-
-    1. loads the merged filter from ``state_dir`` (versioned deltas,
-       :func:`kafi_spark.functions.bloom.bloom_load_state`),
-    2. keeps only definitely-new rows (``bloom_new`` — no false
-       negatives, so nothing historical ever passes twice),
-    3. hands them to ``sink(new_df, epoch_id)``,
-    4. persists the new rows' fingerprints as this epoch's delta.
+    keeps only the definitely-new rows (``bloom_new`` against the merged
+    filter in ``state_dir`` — no false negatives, so nothing historical
+    ever passes twice), saves the batch's fingerprints as the epoch's
+    delta, and hands the new rows to ``sink(new_df, epoch_id)`` — the
+    module's epoch protocol, idempotent-set algebra.
 
     Contrast with :func:`dedup_exact_stream`: that operator's state is
     exact but watermark-GC'd (late copies re-admit once state expires)
     and lives inside one checkpoint. Bloom state is FOREVER-seen across
     restarts, different queries, even different clusters sharing the
     state dir — at the price of the configured false-positive rate
-    dropping a sliver of genuinely-new rows. Pick per pipeline.
-
-    Retried epochs are safe AND re-emit identically: the delta write is
-    keyed by epoch id (idempotent overwrite), and the loaded state
-    excludes the current epoch's own delta — so a replay (crash between
-    delta write and sink commit) sees exactly the pre-epoch state and
-    hands the sink the same new rows as the first attempt. Epoch ids
-    are scoped to the query's CHECKPOINT: restarting with the same
-    checkpoint continues the sequence (safe); starting a FRESH
-    checkpoint against the same state dir restarts epochs at 0 and
-    would overwrite old deltas — give each fresh checkpoint a distinct
-    ``version_prefix`` (e.g. a run id) to keep delta keys disjoint.
+    dropping a sliver of genuinely-new rows. Pick per pipeline. Starting
+    a FRESH checkpoint against the same state dir restarts epochs at 0:
+    give each fresh checkpoint a distinct ``version_prefix`` (e.g. a run
+    id) to keep delta keys disjoint.
     """
-    from kafi_spark.functions.bloom import (
-        bloom_build, bloom_load_state, bloom_new, bloom_save_delta)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        state = bloom_load_state(
-            spark, state_dir, exclude_version=f"{version_prefix}{epoch_id}"
-        )
+    def step(batch_df, state):
         if drop_batch_dups:
-            # DETERMINISTIC representative per text (round-9 review):
-            # dropDuplicates keeps whichever row a task saw first, so a
-            # crash-replayed epoch could hand the sink a DIFFERENT row
-            # for the same text than the first attempt — breaking the
-            # documented byte-identical-replay contract for sinks that
-            # read the non-text columns. A full-row hash as the pick
-            # order makes the winner a pure function of the data (ties
-            # ⇒ identical rows ⇒ interchangeable).
-            from pyspark.sql import Window as W
-
+            # DETERMINISTIC representative per text: dropDuplicates keeps
+            # whichever row a task saw first, so a retried epoch could
+            # hand the sink a DIFFERENT row for the same text than the
+            # first attempt — breaking byte-identical replay for sinks
+            # that read the non-text columns. A full-row hash as the
+            # pick order makes the winner a pure function of the data
+            # (ties ⇒ identical rows ⇒ interchangeable).
             wo = W.partitionBy(text_col).orderBy(
                 F.xxhash64(*batch_df.columns))
             b = (batch_df.withColumn("__rn", F.row_number().over(wo))
@@ -271,40 +378,14 @@ def bloom_dedup_stream(
         # consume the batch; without this the source would re-execute
         # per consumer (sanctioned localCheckpoint deviation, PLANS.md)
         b = b.localCheckpoint()
-        new = bloom_new(b, state, text_col, num_bits, num_hashes, seed)
-        if sink is not None:
-            sink(new, epoch_id)
-        # the delta MUST come from the whole deduped batch, not from
-        # `new`: on an epoch REPLAY the first attempt's delta is already
-        # merged into state, `new` comes back empty, and a new-built
-        # delta would overwrite the epoch's fingerprints with an empty
-        # filter — un-seeing those rows forever. Batch-built deltas are
-        # idempotent (already-seen rows just re-set already-set bits).
-        delta = bloom_build(b.select(text_col), text_col, num_bits, num_hashes, seed)
-        bloom_save_delta(delta, state_dir, f"{version_prefix}{epoch_id}")
+        new = bloom_new(b, state[""], text_col, num_bits, num_hashes, seed)
+        delta = bloom_build(
+            b.select(text_col), text_col, num_bits, num_hashes, seed)
+        return {"": delta}, lambda: new
 
-    return process
-
-
-def _load_fp_state(spark, state_dir: str, exclude_version: str,
-                   fp_type: str = "bigint") -> DataFrame:
-    """Merged fingerprint-set state for the span/substring/exact dedup
-    streams: distinct ``__fp`` over every persisted delta EXCEPT the
-    current epoch's own (``v=<exclude_version>``) — so a replayed epoch
-    sees exactly the pre-epoch state and re-emits the same output as
-    its first attempt (crash between delta write and sink commit).
-
-    ``fp_type``: the span/gram fingerprints are xxhash64 longs since
-    r13 (spans.py:_dedup_spans collision note) — state dirs written by
-    pre-r13 engines (string md5 fps) are not readable by this version;
-    the exact-dedup stream's TEXT fingerprints stay md5 strings (they
-    twin the batch ``text_stats`` fingerprint column, which the oracle
-    replays) and pass ``fp_type="string"``."""
-    from kafi_spark.functions.state import load_deltas
-
-    df = load_deltas(spark, state_dir, exclude_version,
-                     empty_schema=f"__fp {fp_type}")
-    return df.select("__fp").distinct()
+    return _epoch_stream(step, sink, state_dir,
+                         {"": (bloom_load_state, bloom_save_delta)},
+                         version_prefix)
 
 
 def span_dedup_stream(
@@ -320,14 +401,9 @@ def span_dedup_stream(
     (keep='first', max_occurrences=1 semantics — the configuration whose
     decisions are causal in arrival order; see divergence note below).
 
-    Returns a ``foreachBatch`` callable maintaining EXACT persisted
-    state: the set of span fingerprints ever seen, stored as versioned
-    parquet deltas under ``state_dir`` (the
-    :func:`~kafi_spark.streaming.stateful.bloom_dedup_stream` delta
-    discipline — epoch-keyed overwrites make replays idempotent, the
-    merged state is a pure distinct-union so replay order never
-    matters, and the load EXCLUDES the current epoch's own delta so a
-    replayed epoch re-emits byte-identically). Per micro-batch:
+    Returns a ``foreachBatch`` callable keeping EXACT persisted state:
+    the set of span fingerprints ever seen, under ``state_dir`` (the
+    module's epoch protocol, idempotent-set algebra). Per micro-batch:
 
     1. explode documents into spans, fingerprint each (xxhash64 — the batch
        operator's key, spans.py:107);
@@ -336,12 +412,9 @@ def span_dedup_stream(
        ``(id, span_id)`` wins — the batch operator's keeper order);
     3. reassemble surviving spans into documents
        (``(id, text, n_spans_kept)``, order-preserving — same output
-       contract as the batch operator) and hand them to
-       ``sink(out_df, epoch_id)``;
-    4. persist ALL of the batch's span fingerprints as this epoch's
-       delta (from the whole batch, not the survivors — a duplicate
-       span occurrence still proves the span is seen; whole-batch
-       deltas stay correct however the batch splits).
+       contract as the batch operator);
+    4. save ALL of the batch's span fingerprints as the epoch's delta,
+       then hand the documents to ``sink(out_df, epoch_id)``.
 
     Replaying a batch corpus through this operator in arrival order
     (ascending ``(id, span_id)``) yields EXACTLY the batch operator's
@@ -357,31 +430,20 @@ def span_dedup_stream(
     forever-exact state is too large, trade exactness for bounded bits
     with :func:`bloom_dedup_stream` over exploded spans.
     """
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from kafi_spark.functions.spans import text_spans
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        seen = _load_fp_state(spark, state_dir, f"{version_prefix}{epoch_id}")
+    def step(batch_df, state):
         # null texts pass through unchanged — the batch operator's
         # contract (span_dedup's null leg). Unsplit, a null doc's NULL
         # words array produced one span=NULL row, which came back as
         # (id, '', 1) — an empty-string doc with a phantom kept span —
-        # and salted the state with a null fingerprint (round-8 session
-        # review, reproduced against the batch twin).
-        from kafi_spark.functions.spans import _null_doc_leg
-        from kafi_spark.functions.text import ws_tokens as _wst
-
+        # and salted the state with a null fingerprint.
         nulls = _null_doc_leg(batch_df, text_col, id_col, "n_spans_kept")
         # zero-token docs pass through unchanged too — twin parity with
-        # the batch operator's round-9 leg (text_spans now emits no rows
-        # for them, so without this they would vanish from the output)
+        # the batch operator (text_spans emits no rows for them, so
+        # without this they would vanish from the output)
         nulls = nulls.unionByName(
             batch_df.filter(
                 F.col(text_col).isNotNull()
-                & (F.size(_wst(text_col)) == 0)
+                & (F.size(ws_tokens(text_col)) == 0)
             ).select(
                 F.col(id_col), F.col(text_col).alias("text"),
                 F.lit(0).cast("long").alias("n_spans_kept")))
@@ -393,20 +455,17 @@ def span_dedup_stream(
         spans = spans.localCheckpoint()
         wo = W.partitionBy("__fp").orderBy(F.col(id_col), F.col("span_id"))
         fresh = (
-            spans.join(seen, "__fp", "left_anti")
+            spans.join(state[""], "__fp", "left_anti")
             .withColumn("__rn", F.row_number().over(wo))
             .filter(F.col("__rn") == 1)
         )
-        from kafi_spark.functions.spans import _reassemble
-
         out = _reassemble(fresh, id_col, joiner, "n_spans_kept"
                           ).unionByName(nulls)
-        if sink is not None:
-            sink(out, epoch_id)
-        _save_delta(spans.select("__fp").distinct(), state_dir,
-                    f"{version_prefix}{epoch_id}")
+        return {"": spans.select("__fp").distinct()}, lambda: out
 
-    return process
+    return _epoch_stream(step, sink, state_dir,
+                         {"": (_fp_set("bigint"), save_delta)},
+                         version_prefix)
 
 
 def decontaminate_stream(
@@ -430,17 +489,12 @@ def decontaminate_stream(
     therefore IDENTICAL per document, any batch split — asserted by
     test.
     """
-    from kafi_spark.functions.contamination import decontaminate
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        out = decontaminate(
+    def step(batch_df, _):
+        return {}, lambda: decontaminate(
             batch_df, benchmark, n, text_col, id_col,
-            bench_text_col, bench_id_col,
-        )
-        if sink is not None:
-            sink(out, epoch_id)
+            bench_text_col, bench_id_col)
 
-    return process
+    return _epoch_stream(step, sink)
 
 
 def substring_dedup_stream(
@@ -456,11 +510,9 @@ def substring_dedup_stream(
     max_occurrences=1 — the causal-in-arrival-order configuration, same
     restriction and for the same reason as :func:`span_dedup_stream`).
 
-    ``foreachBatch`` callable maintaining the exact set of sliding
-    min_tokens-gram fingerprints ever seen as versioned parquet deltas
-    under ``state_dir`` (the :func:`bloom_dedup_stream` delta
-    discipline: epoch-keyed overwrites, distinct-union merge —
-    idempotent under replay, order-insensitive). Per micro-batch:
+    ``foreachBatch`` callable keeping the exact set of sliding
+    min_tokens-gram fingerprints ever seen under ``state_dir`` (the
+    module's epoch protocol, idempotent-set algebra). Per micro-batch:
 
     1. slide min_tokens-grams over each document (the batch operator's
        exact fingerprint scheme, spans.py:_sliding_grams);
@@ -469,26 +521,17 @@ def substring_dedup_stream(
        batch (first by ``(id, start)`` — the batch keeper order);
     3. union marked intervals per document and cut the covered tokens
        (spans.py:_cut_marked_grams — byte-identical reconstruction to
-       the batch operator), hand ``(id, text, n_tokens_removed)`` to
-       ``sink(out_df, epoch_id)``; every batch document is emitted,
-       fully-duplicated ones with empty text (the batch contract);
-    4. persist ALL of the batch's gram fingerprints as this epoch's
-       delta (whole-batch, not survivors — replay idempotence).
+       the batch operator) into ``(id, text, n_tokens_removed)``; every
+       batch document is emitted, fully-duplicated ones with empty text
+       (the batch contract);
+    4. save ALL of the batch's gram fingerprints as the epoch's delta,
+       then hand the documents to ``sink(out_df, epoch_id)``.
 
     Replaying a corpus in ascending ``(id, start)`` arrival order
     reproduces the batch operator's output exactly — asserted by test.
     """
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from kafi_spark.functions.dedup import _parallelize
-    from kafi_spark.functions.spans import _cut_marked_grams, _sliding_grams
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        seen = _load_fp_state(spark, state_dir, f"{version_prefix}{epoch_id}")
-        from kafi_spark.functions.spans import ws_tokens
-
+    def step(batch_df, state):
+        seen = state[""]
         bound = _parallelize(batch_df).select(
             F.col(id_col),
             F.col(text_col).alias("__orig"),
@@ -496,8 +539,7 @@ def substring_dedup_stream(
         )
         # TWO consumers of bound (the gram build and the cut stage):
         # without this anchor the full-text tokenization and round-robin
-        # exchange execute twice per micro-batch (round-9 review; same
-        # 'anchor once' discipline as the span twin)
+        # exchange execute twice per micro-batch
         bound = bound.localCheckpoint()
         # two consumers (marks + delta write): anchor the gram explode once
         grams = _sliding_grams(bound, id_col, min_tokens).localCheckpoint()
@@ -512,12 +554,11 @@ def substring_dedup_stream(
         out = _cut_marked_grams(
             bound, historical.unionByName(in_batch), id_col, min_tokens
         )
-        if sink is not None:
-            sink(out, epoch_id)
-        _save_delta(grams.select("__fp").distinct(), state_dir,
-                    f"{version_prefix}{epoch_id}")
+        return {"": grams.select("__fp").distinct()}, lambda: out
 
-    return process
+    return _epoch_stream(step, sink, state_dir,
+                         {"": (_fp_set("bigint"), save_delta)},
+                         version_prefix)
 
 
 def curate_documents_stream(
@@ -542,15 +583,16 @@ def curate_documents_stream(
 
     1. quality gate: text_stats language + quality filter (stateless,
        identical to batch);
-    2. exact dedup: persisted fingerprint-set state (the
-       :func:`span_dedup_stream` delta discipline — epoch-keyed parquet
-       deltas, distinct-union merge, replay-idempotent); a document
-       drops if its md5 fingerprint was seen in any earlier epoch, or a
-       lower-id copy exists in THIS batch;
-    3. near-dup: persisted Bloom state over the SAME MinHash-LSH band
-       keys the batch operator shuffles (dedup.py:_band_keys) — a
+    2. exact dedup: the md5 fingerprint set under ``exact/`` — a
+       document drops if its fingerprint was seen in any earlier epoch,
+       or a lower-id copy exists in THIS batch;
+    3. near-dup: Bloom state under ``bands/`` over the SAME MinHash-LSH
+       band keys the batch operator shuffles (dedup.py:_band_keys) — a
        document drops if any of its band keys is (probably) in state,
        or collides in-batch with a lower-id document's band.
+
+    Both families follow the module's epoch protocol (idempotent-set
+    algebra); both deltas come from the whole batch, not the survivors.
 
     Arrival-order semantics (documented divergences from batch):
     * the batch pipeline keeps the globally LOWEST id of each duplicate
@@ -568,29 +610,10 @@ def curate_documents_stream(
       bands enter state (survivor or not — the component-closure
       choice, matching batch CC reachability).
 
-    Replay discipline (the :func:`bloom_dedup_stream` contract): both
-    states exclude the current epoch's own delta on load, and both
-    deltas are built from the whole batch (not survivors), so a crash-
-    replayed epoch sees the exact pre-epoch state and re-emits
-    byte-identically.
-
     Emits ``(id, n_tokens, quality)`` — the batch pipeline's projection
     — to ``sink(out_df, epoch_id)``.
     """
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from kafi_spark.functions.bloom import (
-        bloom_build, bloom_contains, bloom_load_state, bloom_save_delta)
-    from kafi_spark.functions.dedup import _band_keys, _parallelize
-    from kafi_spark.functions.text import text_stats
-
-    exact_dir = f"{state_dir.rstrip('/')}/exact"
-    bands_dir = f"{state_dir.rstrip('/')}/bands"
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ver = f"{version_prefix}{epoch_id}"
+    def step(batch_df, state):
         batch = _parallelize(batch_df)
 
         # 1. quality gate (identical to batch stage 1)
@@ -604,9 +627,7 @@ def curate_documents_stream(
         # set, and (via join) the near-dup stage (sanctioned barrier,
         # same as the batch pipeline's survivor checkpoint).
         kept = kept.localCheckpoint()
-        seen_fp = _load_fp_state(
-            spark, exact_dir, ver, fp_type="string"
-        ).withColumnRenamed("__fp", "fingerprint")
+        seen_fp = state["exact"].withColumnRenamed("__fp", "fingerprint")
         exact_new = (
             kept.join(seen_fp, "fingerprint", "left_anti")
             .withColumn(
@@ -629,9 +650,8 @@ def curate_documents_stream(
         keys = keys.withColumn(
             "__bk", F.concat_ws(":", F.col("band_id"), F.col("band_hash"))
         ).localCheckpoint()
-        state = bloom_load_state(spark, bands_dir, exclude_version=ver)
         probed = bloom_contains(
-            keys, state, "__bk", num_bits, bloom_hashes, seed
+            keys, state["bands"], "__bk", num_bits, bloom_hashes, seed
         )
         wb = W.partitionBy("band_id", "band_hash")
         flagged = probed.withColumn(
@@ -650,20 +670,15 @@ def curate_documents_stream(
             exact_new.join(dup_ids, id_col, "left_anti")
             .select(id_col, "n_tokens", "quality")
         )
-        if sink is not None:
-            sink(out, epoch_id)
+        exact_delta = kept.select(F.col("fingerprint").alias("__fp")).distinct()
+        bands_delta = bloom_build(
+            keys.select("__bk"), "__bk", num_bits, bloom_hashes, seed)
+        return {"exact": exact_delta, "bands": bands_delta}, lambda: out
 
-        # deltas from the WHOLE batch, not survivors (replay idempotence
-        # + component closure — see bloom_dedup_stream's delta comment)
-        _save_delta(
-            kept.select(F.col("fingerprint").alias("__fp")).distinct(),
-            exact_dir, ver)
-        delta = bloom_build(
-            keys.select("__bk"), "__bk", num_bits, bloom_hashes, seed
-        )
-        bloom_save_delta(delta, bands_dir, ver)
-
-    return process
+    return _epoch_stream(step, sink, state_dir, {
+        "exact": (_fp_set("string"), save_delta),
+        "bands": (bloom_load_state, bloom_save_delta),
+    }, version_prefix)
 
 
 def distinct_sketch_stream(
@@ -685,48 +700,32 @@ def distinct_sketch_stream(
     additionally answer intersection/difference roll-ups — e.g. feed
     :func:`sketches.sketch_retention` the totals frame.
 
-    Per micro-batch: (1) sketch the batch's keys per
-    ``(date_trunc(grain), *dims)`` group, (2) persist as this epoch's
-    delta (``v=<epoch>``, idempotent overwrite), (3) hand ``sink`` the
-    RUNNING totals — merged estimates over the whole state, i.e. the
-    same frame :func:`sketches.sketch_totals` serves ad hoc.
-
-    Unlike the bloom/fingerprint twins, the emission here is a state
-    SUMMARY, so no own-epoch exclusion is needed for replay safety:
-    HLL union is idempotent (register-wise max) and a replayed epoch
-    rebuilds a delta over the identical batch, so totals after the
-    replay equal totals after the first attempt — crash-replay
-    emissions match without excluding anything. State volume is one
-    sketch (≤ 2^lgk bytes) per group per epoch; fold with
+    Per micro-batch: sketch the batch's keys per ``(date_trunc(grain),
+    *dims)`` group, save them as the epoch's delta, and hand ``sink``
+    the RUNNING totals over the whole state — the same frame
+    :func:`sketches.sketch_totals` serves ad hoc (the module's epoch
+    protocol, idempotent-summary algebra). State volume is one sketch
+    (≤ 2^lgk bytes) per group per epoch; fold with
     :func:`sketches.sketch_compact` on long-running streams.
     """
-    from kafi_spark.functions.sketches import (
-        _DEFAULT_LGK, _DEFAULT_THETA_LGK, distinct_over_time,
-        sketch_save_delta, sketch_totals, theta_over_time)
-
     if kind not in ("hll", "theta"):
         raise ValueError(f"kind must be 'hll' or 'theta', got {kind!r}")
     build = distinct_over_time if kind == "hll" else theta_over_time
     if lgk is None:
         lgk = _DEFAULT_LGK if kind == "hll" else _DEFAULT_THETA_LGK
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
+    def step(batch_df, _):
         delta = build(
             batch_df, key_col, time_col, grain, dims, lgk
         ).drop("distinct_est")
-        sketch_save_delta(delta, state_dir,
-                          f"{version_prefix}{epoch_id}")
-        if sink is not None:
-            totals = sketch_totals(
-                batch_df.sparkSession, state_dir, ["bucket", *dims],
-                kind=kind,
-                # theta union has its own precision cap: merge at the
-                # BUILD lgk so high-precision state isn't downsampled
-                lgk=lgk if kind == "theta" else None,
-            )
-            sink(totals, epoch_id)
+        return {"": delta}, lambda: sketch_totals(
+            batch_df.sparkSession, state_dir, ["bucket", *dims], kind=kind,
+            # theta union has its own precision cap: merge at the
+            # BUILD lgk so high-precision state isn't downsampled
+            lgk=lgk if kind == "theta" else None)
 
-    return process
+    return _epoch_stream(step, sink, state_dir,
+                         {"": (None, sketch_save_delta)}, version_prefix)
 
 
 def quantile_sketch_stream(
@@ -741,38 +740,22 @@ def quantile_sketch_stream(
 ):
     """Streaming twin of :func:`kafi_spark.functions.sketches.
     quantiles_over_time`: a ``foreachBatch`` callable maintaining
-    persisted per-bucket KLL quantile sketches incrementally.
-
-    KLL merge is ADDITIVE (not idempotent), so the replay discipline
-    differs from the HLL/bloom twins in mechanism but not in outcome:
-    each epoch's rows land in exactly one ``v=<epoch>`` delta, a
-    replayed epoch OVERWRITES its own delta (so its values are counted
-    once, never twice), and the read path (:func:`sketches.kll_totals`)
-    merges each committed delta exactly once under the compaction
-    watermark. The emission is a state summary, so crash-replay
-    emissions match the first attempt's byte-for-byte.
+    persisted per-bucket KLL quantile sketches incrementally, and
+    handing ``sink`` the running totals read by
+    :func:`sketches.kll_totals` (the module's epoch protocol, additive
+    algebra: a retried epoch overwrites its own delta, so its values
+    are counted once).
     """
-    from kafi_spark.functions.sketches import (
-        _kll_dtype_of, kll_save_delta, kll_totals, quantiles_over_time)
-
-    resolved = {"dtype": dtype}
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if resolved["dtype"] is None:
-            resolved["dtype"] = _kll_dtype_of(batch_df, value_col)
+    def step(batch_df, _):
+        nonlocal dtype  # resolved from the first batch, then fixed
+        dtype = dtype or _kll_dtype_of(batch_df, value_col)
         delta = quantiles_over_time(
-            batch_df, value_col, time_col, grain, dims, k,
-            resolved["dtype"],
-        )
-        kll_save_delta(delta, state_dir, epoch_id)
-        if sink is not None:
-            totals = kll_totals(
-                batch_df.sparkSession, state_dir, ["bucket", *dims],
-                resolved["dtype"], k,
-            )
-            sink(totals, epoch_id)
+            batch_df, value_col, time_col, grain, dims, k, dtype)
+        return {"": delta}, lambda: kll_totals(
+            batch_df.sparkSession, state_dir, ["bucket", *dims], dtype, k)
 
-    return process
+    return _epoch_stream(step, sink, state_dir,
+                         {"": (None, kll_save_delta)})
 
 
 def cms_sketch_stream(
@@ -787,28 +770,19 @@ def cms_sketch_stream(
 ):
     """Streaming twin of :func:`kafi_spark.functions.sketches.
     cms_over_time`: a ``foreachBatch`` callable maintaining persisted
-    per-bucket count-min counter tables incrementally.
-
-    Additive state with the KLL replay discipline: each epoch's rows
-    land in exactly one ``v=<epoch>`` delta (replay = overwrite own
-    delta), and :func:`sketches.cms_totals` merges each committed delta
-    exactly once under the compaction watermark. ``sink`` receives the
-    RUNNING merged counter table — probe it with
-    :func:`sketches.cms_estimate` for frequencies over the whole
+    per-bucket count-min counter tables incrementally (the module's
+    epoch protocol, additive algebra). ``sink`` receives the RUNNING
+    merged counter table from :func:`sketches.cms_totals` — probe it
+    with :func:`sketches.cms_estimate` for frequencies over the whole
     history so far."""
-    from kafi_spark.functions.sketches import (
-        cms_over_time, cms_totals, kll_save_delta)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
+    def step(batch_df, _):
         delta = cms_over_time(
             batch_df, key_col, time_col, grain, dims, depth, width)
-        kll_save_delta(delta, state_dir, epoch_id)
-        if sink is not None:
-            totals = cms_totals(
-                batch_df.sparkSession, state_dir, ["bucket", *dims])
-            sink(totals, epoch_id)
+        return {"": delta}, lambda: cms_totals(
+            batch_df.sparkSession, state_dir, ["bucket", *dims])
 
-    return process
+    return _epoch_stream(step, sink, state_dir,
+                         {"": (None, kll_save_delta)})
 
 
 def perplexity_buckets_stream(
@@ -832,13 +806,11 @@ def perplexity_buckets_stream(
     Per micro-batch: (1) score the batch against the STATIC reference
     LM (:func:`importance.lm_quality_score` — the reference corpus is a
     batch frame, fit once per epoch from a bounded hash model), (2)
-    persist the batch's per-group KLL score sketches as this epoch's
-    delta (idempotent per-epoch overwrite — the additive-state
-    discipline of :func:`quantile_sketch_stream`), (3) band the batch
-    against the cut points of the ACCUMULATED state (every epoch so
-    far, merged under the compaction watermark by
-    :func:`sketches.kll_totals`) and hand ``sink`` the batch rows +
-    ``lm_score`` + ``out_col``.
+    save the batch's per-group KLL score sketches as the epoch's delta
+    (the module's epoch protocol, additive algebra), (3) band the batch
+    against the cut points of the ACCUMULATED state — this epoch
+    included, read by :func:`sketches.kll_totals` — and hand ``sink``
+    the batch rows + ``lm_score`` + ``out_col``.
 
     Semantics vs the batch op, both documented and tested: the batch
     op's percentile_approx over the full corpus becomes KLL quantiles
@@ -847,24 +819,13 @@ def perplexity_buckets_stream(
     rank error (±1.65% at k=200) instead of percentile_approx's
     ``accuracy``. Scores themselves are deterministic and identical to
     the batch op's. Null-`by` rows and no-token docs band to null
-    exactly like the batch op (shared ``_band_case_expr``).
-
-    Replay-idempotent: a replayed epoch overwrites its own delta with
-    identical bytes and re-bands against identical totals (the delta is
-    saved BEFORE totals are read on both attempts), so emissions match
-    byte-for-byte. Long-running streams fold state with
-    :func:`sketches.kll_compact`.
+    exactly like the batch op (shared ``_band_case_expr``). Long-running
+    streams fold state with :func:`sketches.kll_compact`.
     """
-    from kafi_spark.functions.importance import (
-        _band_case_expr, _validate_bands, lm_quality_score)
-    from kafi_spark.functions.sketches import (
-        _kll_fns, kll_save_delta, kll_totals, quantile_sketch)
-
     _validate_bands(cuts, labels)
     group = [by] if by is not None else []
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, _):
         lm = lm_quality_score(
             batch_df, reference, text_col, id_col, n_buckets=n_buckets)
         # no-token docs carry no signal: null their score so they
@@ -885,30 +846,32 @@ def perplexity_buckets_stream(
             keyed.filter(F.col("lm_score").isNotNull()),
             "lm_score", group, k, "double",
         )
-        kll_save_delta(delta, state_dir, epoch_id)
-        if sink is None:
-            return
-        totals = kll_totals(spark, state_dir, group, "double", k)
-        qfn = _kll_fns("double")["quantile"]
-        cuts_frame = totals.select(
-            *group,
-            F.array(
-                *[qfn(F.col("qsketch"), F.lit(float(c))) for c in cuts]
-            ).alias("__cuts"),
-        )
-        if group:
-            banded = keyed.join(F.broadcast(cuts_frame), by, "left")
-        else:
-            banded = keyed.crossJoin(F.broadcast(cuts_frame))
-        labeled = banded.select(
-            F.col(id_col), F.col("lm_score"),
-            _band_case_expr("__cuts", labels).alias(out_col),
-        )
-        out = batch_df.join(labeled, id_col, "left").select(
-            *batch_df.columns, "lm_score", out_col)
-        sink(out, epoch_id)
 
-    return process
+        def emit():
+            totals = kll_totals(
+                batch_df.sparkSession, state_dir, group, "double", k)
+            qfn = _kll_fns("double")["quantile"]
+            cuts_frame = totals.select(
+                *group,
+                F.array(
+                    *[qfn(F.col("qsketch"), F.lit(float(c))) for c in cuts]
+                ).alias("__cuts"),
+            )
+            if group:
+                banded = keyed.join(F.broadcast(cuts_frame), by, "left")
+            else:
+                banded = keyed.crossJoin(F.broadcast(cuts_frame))
+            labeled = banded.select(
+                F.col(id_col), F.col("lm_score"),
+                _band_case_expr("__cuts", labels).alias(out_col),
+            )
+            return batch_df.join(labeled, id_col, "left").select(
+                *batch_df.columns, "lm_score", out_col)
+
+        return {"": delta}, emit
+
+    return _epoch_stream(step, sink, state_dir,
+                         {"": (None, kll_save_delta)})
 
 
 def corpus_report_stream(
@@ -925,18 +888,14 @@ def corpus_report_stream(
     moments, language mix — as documents land, WITHOUT ever rescanning
     the corpus.
 
-    Three state families under ``state_dir``, each on the discipline
-    its algebra requires:
+    Three state families under ``state_dir``, each merged by its
+    algebra under the module's epoch protocol:
 
-    - ``hll/`` — distinct-text sketches (fingerprint HLL). Idempotent
-      union: replay-safe by algebra alone.
-    - ``kll/`` — token-count quantile sketches. Additive: the epoch
-      delta + watermark read discipline (`kll_totals`).
-    - ``counters/`` — additive long-format counter rows (rows, token/
-      char totals, quality sum, per-language counts). Same epoch
-      discipline as KLL (each row in exactly one ``v=<epoch>``, replay
-      overwrites its own delta, reads fold each committed delta once
-      via the shared `_kll_state_dirs` watermark reader).
+    - ``hll/`` — distinct-text sketches (fingerprint HLL), idempotent
+      summary;
+    - ``kll/`` — token-count quantile sketches, additive;
+    - ``counters/`` — long-format counter rows (rows, token/char
+      totals, quality sum, per-language counts), additive.
 
     Per micro-batch: one `text_stats` pass over the batch feeds all
     three deltas; the batch frame is checkpointed so the regex scan
@@ -947,20 +906,9 @@ def corpus_report_stream(
     report exactly; ``distinct_texts``/``dup_rate`` and the token
     percentiles are sketch estimates.
     """
-    from kafi_spark.functions.sketches import (
-        distinct_sketch, kll_save_delta, quantile_sketch, sketch_save_delta)
-    from kafi_spark.functions.text import text_stats
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
+    def step(batch_df, _):
         stats = text_stats(batch_df, text_col, id_col).localCheckpoint()
-        root = state_dir.rstrip("/")
-        sketch_save_delta(
-            distinct_sketch(stats, "fingerprint", lgk=lgk),
-            f"{root}/hll", epoch_id)
-        kll_save_delta(
-            quantile_sketch(stats, "n_tokens", dtype="bigint", k=kll_k),
-            f"{root}/kll", epoch_id)
-        counters = stats.agg(
+        counters = _global_rows(stats.agg(
             F.count(F.lit(1)).alias("rows"),
             F.sum("n_tokens").alias("total_tokens"),
             F.sum("n_chars").alias("total_chars"),
@@ -969,24 +917,36 @@ def corpus_report_stream(
             # null quality, and the batch report's avg() skips them —
             # dividing by `rows` would silently deflate the mean
             F.count("quality").alias("n_quality"),
-        ).select(F.explode(F.array(*[
-            F.struct(F.lit("global").alias("section"),
-                     F.lit(m).alias("metric"),
-                     F.col(m).cast("double").alias("value"))
-            for m in ("rows", "total_tokens", "total_chars", "sum_quality",
-                      "n_quality")
-        ])).alias("e")).select("e.*").unionByName(
+        ), {m: F.col(m) for m in ("rows", "total_tokens", "total_chars",
+                                  "sum_quality", "n_quality")}).unionByName(
             stats.groupBy("lang_guess").count().select(
                 F.lit("lang").alias("section"),
                 F.coalesce("lang_guess", F.lit("unknown")).alias("metric"),
                 F.col("count").cast("double").alias("value"),
             ))
-        kll_save_delta(counters, f"{root}/counters", epoch_id)
-        if sink is not None:
-            sink(corpus_report_totals(batch_df.sparkSession, state_dir,
-                                      kll_k=kll_k), epoch_id)
+        return {
+            "hll": distinct_sketch(stats, "fingerprint", lgk=lgk),
+            "kll": quantile_sketch(stats, "n_tokens", dtype="bigint", k=kll_k),
+            "counters": counters,
+        }, lambda: corpus_report_totals(
+            batch_df.sparkSession, state_dir, kll_k=kll_k)
 
-    return process
+    return _epoch_stream(step, sink, state_dir, {
+        "hll": (None, sketch_save_delta),
+        "kll": (None, kll_save_delta),
+        "counters": (None, kll_save_delta),
+    })
+
+
+def _global_rows(df: DataFrame, metrics: dict) -> DataFrame:
+    """Dataset-card rows ``(section='global', metric, value double)``:
+    one per ``metrics`` entry (metric name → column over ``df``) for
+    each row of ``df``."""
+    return df.select(F.explode(F.array(*[
+        F.struct(F.lit("global").alias("section"), F.lit(m).alias("metric"),
+                 v.cast("double").alias("value"))
+        for m, v in metrics.items()
+    ])).alias("e")).select("e.*")
 
 
 def corpus_report_totals(spark, state_dir: str, kll_k: int = 200) -> DataFrame:
@@ -996,16 +956,12 @@ def corpus_report_totals(spark, state_dir: str, kll_k: int = 200) -> DataFrame:
     :func:`~kafi_spark.functions.profile.corpus_report`. Reads ONLY
     state rows (sketches + counters): cost is independent of corpus
     size."""
-    from kafi_spark.functions.sketches import (
-        kll_totals, quantile_values, sketch_totals)
-    from kafi_spark.functions.state import watermark_paths
-
     root = state_dir.rstrip("/")
     # the shared committed-read-set helper, WITH its empty-paths guard:
     # a first epoch crashed mid-counters-write leaves the dir present
     # but without any committed delta, and a bare spark.read.parquet()
     # of zero paths raises an opaque path error instead of a clear
-    # no-state signal (round-9 review; same guard kll_totals has)
+    # no-state signal (same guard kll_totals has)
     paths = watermark_paths(f"{root}/counters", spark=spark)
     if not paths:
         raise FileNotFoundError(
@@ -1015,21 +971,12 @@ def corpus_report_totals(spark, state_dir: str, kll_k: int = 200) -> DataFrame:
         spark.read.parquet(*paths)
         .groupBy("section", "metric").agg(F.sum("value").alias("value"))
     )
-    hll = sketch_totals(spark, f"{root}/hll").select(
-        F.lit("global").alias("section"),
-        F.lit("distinct_texts").alias("metric"),
-        F.col("distinct_est").cast("double").alias("value"))
-    kll = quantile_values(
+    hll = _global_rows(sketch_totals(spark, f"{root}/hll"),
+                       {"distinct_texts": F.col("distinct_est")})
+    kll = _global_rows(quantile_values(
         kll_totals(spark, f"{root}/kll", dtype="bigint", k=kll_k),
         [0.5, 0.95], dtype="bigint",
-    ).select(F.explode(F.array(
-        F.struct(F.lit("global").alias("section"),
-                 F.lit("p50_tokens").alias("metric"),
-                 F.col("q50").cast("double").alias("value")),
-        F.struct(F.lit("global").alias("section"),
-                 F.lit("p95_tokens").alias("metric"),
-                 F.col("q95").cast("double").alias("value")),
-    )).alias("e")).select("e.*")
+    ), {"p50_tokens": F.col("q50"), "p95_tokens": F.col("q95")})
 
     base = counters.unionByName(hll).unionByName(kll)
     # derived metrics need the scalar counters; they are a handful of
@@ -1043,21 +990,13 @@ def corpus_report_totals(spark, state_dir: str, kll_k: int = 200) -> DataFrame:
         # back to rows as the divisor (the old behavior) instead of
         # failing the pivot lookup on legacy state
         wide = wide.withColumn("n_quality", F.col("rows"))
-    derived = wide.select(F.explode(F.array(
-        F.struct(F.lit("global").alias("section"),
-                 F.lit("mean_tokens").alias("metric"),
-                 (F.col("total_tokens") / F.col("rows")).alias("value")),
-        F.struct(F.lit("global").alias("section"),
-                 F.lit("mean_quality").alias("metric"),
-                 (F.col("sum_quality") / F.col("n_quality")).alias("value")),
-        F.struct(F.lit("global").alias("section"),
-                 F.lit("dup_rate").alias("metric"),
-                 # clamp: HLL can overshoot the true row count slightly
-                 F.greatest(
-                     F.lit(0.0),
-                     F.lit(1.0) - F.col("distinct_texts") / F.col("rows"))
-                 .alias("value")),
-    )).alias("e")).select("e.*")
+    derived = _global_rows(wide, {
+        "mean_tokens": F.col("total_tokens") / F.col("rows"),
+        "mean_quality": F.col("sum_quality") / F.col("n_quality"),
+        # clamp: HLL can overshoot the true row count slightly
+        "dup_rate": F.greatest(
+            F.lit(0.0), F.lit(1.0) - F.col("distinct_texts") / F.col("rows")),
+    })
     return base.unionByName(derived).select(
         "section", "metric", F.col("value").cast("string").alias("value"))
 
@@ -1092,11 +1031,11 @@ def dedup_against_stream(
       store for candidate pairs. Only candidate ids' texts are ever
       read into the join (column-pruned parquet scan).
 
-    Replay discipline: the bloom family's — state loads EXCLUDE the
-    current epoch's own delta (a crash-replayed epoch would otherwise
-    find its own previous partial write and drop every row as a
-    self-match), writes are idempotent per-epoch overwrites, and
-    uncommitted deltas (no ``_SUCCESS``) are invisible.
+    Both follow the module's epoch protocol (idempotent-set algebra),
+    read through the compaction watermark so
+    :func:`dedup_state_compact` can fold them. Without the own-epoch
+    exclusion a retried epoch would find its own earlier write and drop
+    every row as a self-match.
 
     Within-batch near-dups both survive, exactly like the batch gate
     (its documented contract — run :func:`dedup.minhash_lsh_pairs` on
@@ -1104,26 +1043,14 @@ def dedup_against_stream(
 
     ``sink`` (if given) receives the epoch's SURVIVOR frame.
     """
-    from kafi_spark.functions.dedup import _band_keys, _lsh_join_from_bands
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        root = state_dir.rstrip("/")
+    def step(batch_df, state):
         batch = batch_df.select(id_col, text_col).localCheckpoint()
         bb = _band_keys(
             batch, text_col, id_col, k, num_hashes, bands, seed
         ).localCheckpoint()
-
-        # pass the batch's own session through (round-9 review: the old
-        # spark=None wrapper made scheme:// state dirs depend on the
-        # active-session fallback instead)
-        band_dirs = _dedup_state_paths(f"{root}/bands", epoch_id, spark)
-        if band_dirs:
-            state_bands = spark.read.parquet(*band_dirs)
-            state_docs = spark.read.parquet(
-                *_dedup_state_paths(f"{root}/docs", epoch_id, spark))
+        if state["bands"] is not None:
             hits = _lsh_join_from_bands(
-                bb, state_bands, batch, state_docs,
+                bb, state["bands"], batch, state["docs"],
                 text_col, id_col, k, threshold, max_bucket)
             survivors = batch.join(
                 hits.select(F.col("left_id").alias(id_col)).distinct(),
@@ -1131,24 +1058,12 @@ def dedup_against_stream(
         else:
             survivors = batch
         sb = bb.join(survivors.select(id_col), id_col, "left_semi")
-        _save_delta(sb, f"{root}/bands", epoch_id)
-        _save_delta(survivors, f"{root}/docs", epoch_id)
-        if sink is not None:
-            sink(survivors, epoch_id)
+        return {"bands": sb, "docs": survivors}, lambda: survivors
 
-    return process
-
-
-def _dedup_state_paths(root: str, exclude_epoch: int, spark=None) -> list[str]:
-    """Committed state dirs for one dedup-state family: the newest
-    ``compact-N`` fold (if any) plus epochs > N — the shared
-    `_kll_state_dirs` watermark reader — minus the CURRENT epoch's own
-    delta (crash-replay exclusion). Band/doc rows are idempotent sets,
-    so even a stale-leftover double-read would only be wasted IO, never
-    wrong results; the watermark read keeps it from happening anyway."""
-    from kafi_spark.functions.state import watermark_paths
-
-    return watermark_paths(root, exclude_epoch, spark)
+    return _epoch_stream(step, sink, state_dir, {
+        "bands": (_committed, save_delta),
+        "docs": (_committed, save_delta),
+    })
 
 
 def dedup_state_compact(spark, state_dir: str) -> int:
@@ -1165,34 +1080,28 @@ def dedup_state_compact(spark, state_dir: str) -> int:
     before epoch k+1 starts), so folding them is replay-safe. The
     watermark is computed from the state, never caller-chosen (a value
     above the newest epoch would make later deltas invisible and
-    silently disable the gate). Returns N (or the existing watermark /
-    -1 when there is nothing new to fold)."""
-    from kafi_spark.functions.state import committed_dirs
-
+    silently disable the gate). Each family is listed once, and its
+    fold set comes from that listing. Returns N (or the
+    existing watermark / -1 when there is nothing new to fold)."""
     root = state_dir.rstrip("/")
-    try:
-        best_n, _, live = committed_dirs(f"{root}/bands", spark)
-    except FileNotFoundError:
-        return -1
+
+    def listing(fam):
+        try:
+            return committed_dirs(f"{root}/{fam}", spark)
+        except FileNotFoundError:
+            return None, None, []
+
+    bands = listing("bands")
+    best_n, _, live = bands
     if not live:
         return best_n if best_n is not None else -1
-    newest = max(int(p.rsplit("v=", 1)[1]) for p in live)
-    watermark = newest - 1
+    watermark = max(int(p.rsplit("v=", 1)[1]) for p in live) - 1
     if best_n is not None and watermark <= best_n:
         return best_n                      # nothing new below the fence
-    import os
-
-    def foldable(paths):
-        out = []
-        for p in paths:
-            tag = os.path.basename(p)[2:]
-            if tag.startswith("compact-") or int(tag) <= watermark:
-                out.append(p)
-        return out
-
-    for fam in ("bands", "docs"):
-        paths = foldable(_dedup_state_paths(f"{root}/{fam}",
-                                            exclude_epoch=-1, spark=spark))
+    for fam, (_, compact, live) in (("bands", bands),
+                                    ("docs", listing("docs"))):
+        paths = [compact] if compact else []
+        paths += [p for p in live if int(p.rsplit("v=", 1)[1]) <= watermark]
         if not paths:
             continue
         folded = spark.read.parquet(*paths).distinct().localCheckpoint()

@@ -930,22 +930,24 @@ def test_verify_spread_conf_gate(spark):
         return df._jdf.queryExecution().executedPlan().toString().count(
             "RoundRobinPartitioning")
 
+    def pairs():
+        return sorted(map(tuple, minhash_lsh_pairs(
+            docs, "text", "doc_id", k=2, threshold=0.5).collect()))
+
     base = rr_count(cand)
     assert rr_count(_verify_spread(cand)) == base + 1
     old = spark.conf.get("spark.kafi.dedup.verifySpread", None)
     try:
         spark.conf.set("spark.kafi.dedup.verifySpread", "0")
         assert rr_count(_verify_spread(cand)) == base
+        pairs_unspread = pairs()
         spark.conf.set("spark.kafi.dedup.verifySpread", "7")
         spread = _verify_spread(cand)
         assert rr_count(spread) == base + 1
-        off = sorted(map(tuple, minhash_lsh_pairs(
-            docs, "text", "doc_id", k=2, threshold=0.5).collect()))
     finally:
         if old is None:
             spark.conf.unset("spark.kafi.dedup.verifySpread")
         else:
             spark.conf.set("spark.kafi.dedup.verifySpread", old)
-    on = sorted(map(tuple, minhash_lsh_pairs(
-        docs, "text", "doc_id", k=2, threshold=0.5).collect()))
-    assert off == on and len(on) > 0
+    pairs_default = pairs()
+    assert pairs_unspread == pairs_default and len(pairs_default) > 0

@@ -27,9 +27,9 @@ A hit is not automatically a bug — a deliberately cheap xxhash64 over
 two longs in a join key is fine — so the audit prints every hit with
 its query and line for human adjudication, and only EXITS non-zero for
 the classes with zero legitimate uses in this engine's conditions:
-regex engines and md5 chains (the #10/#11 classes). Add a
-``# condition-audit: allow <query> <pattern>`` entry to ALLOWLIST with
-a dated justification to sanction a reviewed hit.
+regex engines and md5 chains (the #10/#11 classes). To sanction a
+reviewed hit, add its ``(query, class)`` tuple to ``ALLOWLIST`` with a
+comment giving the reason and the round it was adjudicated in.
 
 Usage: python tools/condition_audit.py [sf_dir]   (default sf0.001)
 """
@@ -78,8 +78,31 @@ SOFT = {
     "hof": r"\b(?:aggregate|transform|exists|forall|zip_with)\(",
     "hof-filter": r"(?<![\w.])filter\(lambdafunction",
     "concat-ws": r"\bconcat_ws\(",
-    "xxhash-wide": r"\bxxhash64\([^)]*,[^)]*,",  # 3+ args: hashing composites
+    # 3+ top-level args (Spark prints the seed as the last one): a hash
+    # over a composite key rather than one column
+    "xxhash-wide": lambda ln: any(n >= 3 for n in xxhash_arities(ln)),
 }
+
+
+def xxhash_arities(line: str) -> list[int]:
+    """Top-level argument count of every ``xxhash64(...)`` call in
+    ``line``: balanced parenthesised groups are stripped first, so
+    ``xxhash64(concat_ws(':', a, b))`` has one argument and
+    ``xxhash64(a, b, c)`` three."""
+    out = []
+    for m in re.finditer(r"\bxxhash64\(", line, re.I):
+        rest, prev = line[m.end():], None
+        while rest != prev:
+            prev, rest = rest, re.sub(r"\([^()]*\)", "", rest)
+        out.append(rest.split(")", 1)[0].count(",") + 1)
+    return out
+
+
+def _hit(pattern, line: str) -> bool:
+    """A class matches a condition line by regex, or by predicate."""
+    if callable(pattern):
+        return pattern(line)
+    return re.search(pattern, line, re.I) is not None
 
 
 def _condition_lines(plan: str) -> list[str]:
@@ -125,10 +148,10 @@ def main() -> int:
         n_lines += len(lines)
         for ln in lines:
             for cls, pat in HARD.items():
-                if re.search(pat, ln, re.I) and (name, cls) not in ALLOWLIST:
+                if _hit(pat, ln) and (name, cls) not in ALLOWLIST:
                     hard_hits.append((name, cls, ln[:160]))
             for cls, pat in SOFT.items():
-                if re.search(pat, ln, re.I) and (name, cls) not in ALLOWLIST:
+                if _hit(pat, ln) and (name, cls) not in ALLOWLIST:
                     soft_hits.append((name, cls, ln[:160]))
 
     print(f"scanned {n_lines} condition lines across the benched suite")
