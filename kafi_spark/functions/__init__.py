@@ -28,7 +28,6 @@ training-data pipeline needs:
 * ``packing``    — token-budget sequence packing
 * ``mixing``     — target-proportion corpus mixing
 * ``profile``    — one-pass per-column data-quality statistics
-* ``skew``       — salted joins for hot keys
 * ``analytic``   — top-n, lag/lead, rollup/cube, time_rollup,
                    percentiles, funnel conversion, cohort retention
 * ``multimodal`` — binary-column plumbing: header decode, PCM

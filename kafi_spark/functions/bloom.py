@@ -121,10 +121,10 @@ def bloom_contains(
     64 Ki words = filters ≤ 4 Mbit / 512 KB):
 
     * COMPACT (small filter, batch inputs): materialize the bit array
-      as a dense ``array<long>`` literal (one bounded collect — at most
+      as one dense binary literal (one bounded collect — at most
       ``num_bits/64`` rows, the same bounded-metadata class as the
       repo's vocab/centroid collects) and test each row's k probe
-      positions with ``forall`` + ``bit_get`` over the literal —
+      positions with ``forall`` + ``bit_get`` over its bytes —
       fully narrow, ZERO exchanges, no surrogate ids. This is what any
       engine should do with an 8 KB filter: ship it in the plan, not
       through a shuffle (r12 diet: the generic path's per-row-id
@@ -161,25 +161,24 @@ def bloom_contains(
         and not df.isStreaming
         and not bloom.isStreaming
     ):
-        words = [0] * n_words
         # bounded collect: the state frame holds only non-zero words,
-        # capped at n_words <= compact_max_words rows
+        # capped at n_words <= compact_max_words rows. The words pack
+        # little-endian into ONE binary literal, so filter bit p is bit
+        # p % 8 of byte p div 8 (a Python list literal costs one py4j
+        # call per element: ~30 s to build at 64 Ki words)
+        packed = bytearray(n_words * 8)
         for r in bloom.select("word_idx", "bits").collect():
-            words[r["word_idx"]] = r["bits"]
-        # explicit array<bigint>: a small-valued word list would infer
-        # array<int>, and bit_get's position bound follows the ELEMENT
-        # type (pos < 32 for int) — probes 32..63 then throw
-        arr = F.lit(words).cast("array<bigint>")
+            i = r["word_idx"] * 8
+            packed[i:i + 8] = r["bits"].to_bytes(8, "little", signed=True)
+        bits = F.lit(bytes(packed))
         pos = _positions(F.col(col), num_bits, num_hashes, seed)
+        # the probe is < num_bits by construction, so the byte is always
+        # in range; conv(hex(..)) is the byte's unsigned value (binary
+        # does not cast to a number)
+        byte = lambda p: F.conv(F.hex(F.substring(  # noqa: E731
+            bits, F.floor(p / 8).cast("int") + 1, F.lit(1))), 16, 10)
         hit_all = F.forall(
-            pos,
-            # dense literal -> element_at index is always in range (the
-            # probe is < num_bits by construction), so no ANSI hazard
-            lambda p: F.bit_get(
-                F.element_at(arr, F.floor(p / 64).cast("int") + 1), p % 64
-            )
-            == 1,
-        )
+            pos, lambda p: F.bit_get(byte(p).cast("int"), p % 8) == 1)
         return df.select(*df.columns, hit_all.alias(out_col))
     state = bloom.select(
         F.col("word_idx").alias("__bloom_word_idx"),

@@ -147,30 +147,18 @@ def _verify_spread(candidates: DataFrame) -> DataFrame:
     intersects, so AQE's SIZE-based coalescing packs the whole
     CPU-heavy verify stage into one task at any scale (~64 MB advisory
     ≈ millions of pairs ≈ tens of CPU-seconds serialized). One
-    round-robin of the (id, id) pairs is linear in candidate bytes and
-    scales with the cluster.
+    round-robin of the (id, id) pairs to cluster width is linear in
+    candidate bytes and scales with the cluster.
 
-    Width is conf-overridable (``spark.kafi.dedup.verifySpread``; int,
-    0 disables, default = defaultParallelism) because the spread is a
-    measured latency/CPU trade at SMALL candidate counts (r13
+    At small candidate counts the spread is a latency/CPU trade (r13
     adjudication, PLANS.md): splitting ~250k pairs 32 ways left every
     task under the JIT's compile threshold in fresh-session runs —
     wall improved while total task CPU rose up to +30%. At production
     candidate volumes each task holds millions of pairs, the generated
-    loop compiles everywhere, and the spread is pure win; the default
-    therefore stays cluster-width.
+    loop compiles everywhere, and the spread is pure win.
     """
-    spark = candidates.sparkSession
-    raw = spark.conf.get(
-        "spark.kafi.dedup.verifySpread",
-        str(spark.sparkContext.defaultParallelism))
-    try:
-        width = int(raw)
-    except ValueError:
-        width = spark.sparkContext.defaultParallelism
-    if width <= 0:
-        return candidates
-    return candidates.repartition(width)
+    return candidates.repartition(
+        candidates.sparkSession.sparkContext.defaultParallelism)
 
 
 def _filter_materialized(scored: DataFrame, pred: Column,
@@ -575,8 +563,8 @@ def ngram_jaccard_pairs(
             .select("p.id_1", "p.id_2")
             .distinct()
         )
-        # spread the verification (r12; conf-gated r13 — see
-        # _verify_spread for the JIT-threshold CPU trade this makes)
+        # spread the verification (r12 — see _verify_spread for the
+        # JIT-threshold CPU trade this makes)
         cand = _verify_spread(cand)
         if DIAG is not None:
             DIAG["capped_candidates"] = cand
@@ -773,8 +761,8 @@ def _jaccard_verify(
         )
 
     # spread the per-pair verification (r12: AQE's size-based coalescing
-    # serialized 100% of the dupheavy verify onto 1 of 32 cores;
-    # conf-gated r13 — see _verify_spread for the JIT-threshold trade)
+    # serialized 100% of the dupheavy verify onto 1 of 32 cores — see
+    # _verify_spread for the JIT-threshold trade)
     candidates = _verify_spread(candidates)
     t1 = bound(df, id1, "sh_1")
     t2 = bound(df2 if df2 is not None else df, id2, "sh_2")

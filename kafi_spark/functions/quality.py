@@ -126,23 +126,15 @@ def quality_fit(
     # parallelism so a genuinely large sample still reduces in
     # parallel. Unknown stats fall back to the old 8.
     sc = positive.sparkSession.sparkContext
-    # explicit override for operators/tests that know their sample
-    # shape (scale-dependent settings stay parameterised — r12 rule);
-    # unset = the adaptive derivation below
-    override = positive.sparkSession.conf.get(
-        "spark.kafi.quality.trainPartitions", None)
     try:
-        if override is not None:
-            n_parts = max(1, int(override))
+        est_bytes = int(
+            labeled.select(text_col)._jdf.queryExecution()
+            .optimizedPlan().stats().sizeInBytes())
+        if est_bytes <= 0 or est_bytes >= (1 << 62):
+            n_parts = 8
         else:
-            est_bytes = int(
-                labeled.select(text_col)._jdf.queryExecution()
-                .optimizedPlan().stats().sizeInBytes())
-            if est_bytes <= 0 or est_bytes >= (1 << 62):
-                n_parts = 8
-            else:
-                n_parts = max(1, min(sc.defaultParallelism,
-                                     est_bytes // (64 << 20)))
+            n_parts = max(1, min(sc.defaultParallelism,
+                                 est_bytes // (64 << 20)))
     except Exception:  # noqa: BLE001 — stats probe is an optimization only
         n_parts = 8
     train = feats.select("__features", "__label").coalesce(n_parts).persist(

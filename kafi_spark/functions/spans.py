@@ -155,7 +155,6 @@ def _dedup_spans(
     joiner: str,
     max_occurrences: int,
     keep: str,
-    skew_safe: bool = False,
     min_chars: int = 0,
 ) -> DataFrame:
     if keep not in ("first", "none"):
@@ -173,50 +172,29 @@ def _dedup_spans(
     # spans per 10¹² at 100 TB, a 3e-8 corruption rate), the same
     # accepted class as dedup.py's r9 shingle fingerprints.
     fp = spans.withColumn("__fp", F.xxhash64("span"))
-    if skew_safe:
-        # aggregate-then-join instead of a window: the per-fingerprint
-        # count and the keeper (min occurrence) come from map-side
-        # partial aggregates — immune to a mega-duplicated span — and
-        # the join back is AQE-skew-splittable (window partitions are
-        # not). Price: the narrow tokenize/explode subtree plans twice
-        # (stats + probe side). See PLANS.md "Span-dedup skew analysis".
-        stats = fp.groupBy("__fp").agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.min(F.struct(F.col(id_col), F.col("span_id"))).alias("__keep"),
-        )
-        joined = fp.join(stats, "__fp")
-        survives = F.col("__n") <= max_occurrences
-        if keep == "first":
-            survives = survives | (
-                (F.col(f"__keep.{id_col}") == F.col(id_col))
-                & (F.col("__keep.span_id") == F.col("span_id"))
-            )
-        if min_chars > 0:
-            survives = survives | (F.length("span") < min_chars)
-        kept = joined.filter(survives).select(id_col, "span_id", "span")
-    else:
-        # (doc, position) is unique per occurrence → row_number is
-        # deterministic with no tie to break. The COUNT uses the same
-        # ordered spec with an explicitly unbounded frame so Catalyst
-        # plans ONE Window operator (one sort) instead of a second
-        # unordered Window with its own re-sort.
-        wo = W.partitionBy("__fp").orderBy(F.col(id_col), F.col("span_id"))
-        ranked = fp.select(
-            F.col(id_col),
-            "span_id",
-            "span",
-            F.count(F.lit(1))
-            .over(wo.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
-            .alias("__n"),
-            F.row_number().over(wo).alias("__rn"),
-        )
-        survives = F.col("__n") <= max_occurrences
-        if keep == "first":
-            survives = survives | (F.col("__rn") == 1)
-        if min_chars > 0:
-            # trivial lines (blanks) are structure, not boilerplate
-            survives = survives | (F.length("span") < min_chars)
-        kept = ranked.filter(survives)
+    # (doc, position) is unique per occurrence → row_number is
+    # deterministic with no tie to break. The COUNT uses the same
+    # ordered spec with an explicitly unbounded frame so Catalyst plans
+    # ONE Window operator (one sort) instead of a second unordered
+    # Window with its own re-sort. One window, not aggregate-then-join:
+    # see PLANS.md "Span-dedup skew analysis" for the measured trade.
+    wo = W.partitionBy("__fp").orderBy(F.col(id_col), F.col("span_id"))
+    ranked = fp.select(
+        F.col(id_col),
+        "span_id",
+        "span",
+        F.count(F.lit(1))
+        .over(wo.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
+        .alias("__n"),
+        F.row_number().over(wo).alias("__rn"),
+    )
+    survives = F.col("__n") <= max_occurrences
+    if keep == "first":
+        survives = survives | (F.col("__rn") == 1)
+    if min_chars > 0:
+        # trivial lines (blanks) are structure, not boilerplate
+        survives = survives | (F.length("span") < min_chars)
+    kept = ranked.filter(survives)
     return _reassemble(kept, id_col, joiner, "n_spans_kept")
 
 
@@ -227,7 +205,6 @@ def span_dedup(
     span_tokens: int = 8,
     max_occurrences: int = 1,
     keep: str = "first",
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Remove globally-duplicated token spans, keeping document order.
 
@@ -265,7 +242,7 @@ def span_dedup(
         F.lit(0).cast("long").alias("n_spans_kept"))
     spans = text_spans(
         df.filter(F.col(text_col).isNotNull()), text_col, id_col, span_tokens)
-    out = _dedup_spans(spans, id_col, " ", max_occurrences, keep, skew_safe)
+    out = _dedup_spans(spans, id_col, " ", max_occurrences, keep)
     return out.unionByName(nulls).unionByName(empties)
 
 
@@ -276,7 +253,6 @@ def line_dedup(
     sep: str = "\n",
     max_occurrences: int = 1,
     keep: str = "none",
-    skew_safe: bool = False,
     min_line_chars: int = 1,
 ) -> DataFrame:
     """Corpus-wide duplicate-LINE removal (split on a literal separator).
@@ -299,7 +275,7 @@ def line_dedup(
     (round-8 session review)."""
     spans = text_lines(
         df.filter(F.col(text_col).isNotNull()), text_col, id_col, sep)
-    out = _dedup_spans(spans, id_col, sep, max_occurrences, keep, skew_safe,
+    out = _dedup_spans(spans, id_col, sep, max_occurrences, keep,
                        min_chars=min_line_chars)
     return out.unionByName(_null_doc_leg(df, text_col, id_col,
                                          "n_spans_kept"))
@@ -465,7 +441,6 @@ def substring_dedup(
     min_tokens: int = 8,
     max_occurrences: int = 1,
     keep: str = "first",
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Exact duplicated-SUBSTRING removal (suffix-array-spirit dedup,
     Lee et al. 2022 "Deduplicating Training Data Makes Language Models
@@ -511,10 +486,10 @@ def substring_dedup(
     never shuffles; 64-bit since r13, collision math at
     :func:`_dedup_spans`); ONE window on fingerprint (count +
     row_number share a single Window operator, same spec trick as
-    :func:`_dedup_spans`, or the aggregate+join plan under
-    ``skew_safe=True`` — a boilerplate gram duplicated millions of
-    times lands in one sort task otherwise); interval merge = one
-    window on id over REMOVAL MARKS ONLY (tiny relative to corpus);
+    :func:`_dedup_spans`; a boilerplate gram duplicated millions of
+    times lands in one sort task, the trade PLANS.md "Span-dedup skew
+    analysis" measures); interval merge = one window on id over
+    REMOVAL MARKS ONLY (tiny relative to corpus);
     one doc-keyed broadcast-size join attaching the per-doc interval
     array back to the bound split. Reconstruction is an in-row
     ``F.filter`` over token positions testing membership in the merged
@@ -543,34 +518,19 @@ def substring_dedup(
         ws_tokens(text_col).alias("__words"),
     )
     grams = _sliding_grams(bound, id_col, k)
-    if skew_safe:
-        stats = grams.groupBy("__fp").agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.min(F.struct(F.col(id_col), F.col("start"))).alias("__keep"),
-        )
-        joined = grams.join(stats, "__fp")
-        removed = F.col("__n") > max_occurrences
-        if keep == "first":
-            removed = removed & ~(
-                (F.col(f"__keep.{id_col}") == F.col(id_col))
-                & (F.col("__keep.start") == F.col("start"))
-            )
-        marks = joined.filter(removed).select(id_col, "start")
-    else:
-        wo = W.partitionBy("__fp").orderBy(F.col(id_col), F.col("start"))
-        ranked = grams.select(
-            F.col(id_col),
-            "start",
-            F.count(F.lit(1))
-            .over(wo.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
-            .alias("__n"),
-            F.row_number().over(wo).alias("__rn"),
-        )
-        removed = F.col("__n") > max_occurrences
-        if keep == "first":
-            removed = removed & (F.col("__rn") > 1)
-        marks = ranked.filter(removed).select(id_col, "start")
-
+    wo = W.partitionBy("__fp").orderBy(F.col(id_col), F.col("start"))
+    ranked = grams.select(
+        F.col(id_col),
+        "start",
+        F.count(F.lit(1))
+        .over(wo.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
+        .alias("__n"),
+        F.row_number().over(wo).alias("__rn"),
+    )
+    removed = F.col("__n") > max_occurrences
+    if keep == "first":
+        removed = removed & (F.col("__rn") > 1)
+    marks = ranked.filter(removed).select(id_col, "start")
     return _cut_marked_grams(bound, marks, id_col, k)
 
 

@@ -87,10 +87,9 @@ def test_save_load_roundtrip(spark, fitted, tmp_path):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_train_partitions_override_and_stats(spark):
-    """r12: the train-partition count is parameterised via
-    spark.kafi.quality.trainPartitions (scale-dependent settings stay
-    conf-driven) and recorded in kafi_fit_stats."""
+def test_train_partitions_from_stats(spark):
+    """r12: the train-partition count derives from the sample's size
+    statistics and is recorded in kafi_fit_stats."""
     from pyspark.sql import functions as F
 
     from kafi_spark.functions import quality as Q
@@ -101,12 +100,5 @@ def test_train_partitions_override_and_stats(spark):
     neg = spark.range(40).select(
         F.concat(F.lit("zzz qqq xxx vvv kkk jjj www uuu ttt "),
                  F.col("id").cast("string")).alias("text"))
-    spark.conf.set("spark.kafi.quality.trainPartitions", "3")
-    try:
-        model = Q.quality_fit(pos, neg, max_iter=3)
-    finally:
-        spark.conf.unset("spark.kafi.quality.trainPartitions")
-    assert model.kafi_fit_stats["train_partitions"] == 3
-    # default path still records a positive count
-    model2 = Q.quality_fit(pos, neg, max_iter=3)
-    assert model2.kafi_fit_stats["train_partitions"] >= 1
+    model = Q.quality_fit(pos, neg, max_iter=3)
+    assert model.kafi_fit_stats["train_partitions"] >= 1

@@ -201,11 +201,11 @@ def test_semantic_dedup_bounded_under_hot_cell(spark, skewed_embeddings):
 
 def test_substring_dedup_at_50k_hot_gram(spark, big_corpus):
     """substring_dedup on 50k docs where every doc ends with the SAME
-    8-token boilerplate suffix — the hot-fingerprint shape the skew_safe
-    variant exists for. Both plans must agree exactly, every document
-    must shed exactly the 8 boilerplate tokens (except the global first
-    occurrence), and the skew-safe plan's shuffle stays proportional to
-    the corpus (marks + grams), not to hot-gram-count squared."""
+    8-token boilerplate suffix — a hot fingerprint that lands all its
+    occurrences in one window partition. Every document must shed at
+    least the 8 boilerplate tokens (except the global first occurrence),
+    and the shuffle stays proportional to the corpus (marks + grams),
+    not to hot-gram-count squared."""
     from kafi_spark.functions.spans import substring_dedup
 
     boiler = "b0 b1 b2 b3 b4 b5 b6 b7"
@@ -213,7 +213,7 @@ def test_substring_dedup_at_50k_hot_gram(spark, big_corpus):
         "doc_id", F.concat_ws(" ", "text", F.lit(boiler)).alias("text")
     )
     out, moved = _shuffle_delta(spark, lambda: (
-        substring_dedup(docs, min_tokens=8, skew_safe=True)
+        substring_dedup(docs, min_tokens=8)
         .agg(F.sum("n_tokens_removed").alias("gone"),
              F.count(F.lit(1)).alias("docs"))
         .first()

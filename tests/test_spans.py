@@ -85,14 +85,17 @@ def test_span_dedup_validation(docs):
         sp.text_spans(docs, span_tokens=0)
 
 
-def test_span_dedup_matches_duckdb_oracle(spark, sf_dir):
+@pytest.mark.parametrize("keep,max_occ", [("first", 1), ("none", 2)])
+def test_span_dedup_matches_duckdb_oracle(spark, sf_dir, keep, max_occ):
     """Full differential on the real documents table."""
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     got = {r.doc_id: (r.text, r.n_spans_kept)
-           for r in sp.span_dedup(df, span_tokens=8).collect()}
+           for r in sp.span_dedup(df, span_tokens=8, keep=keep,
+                                  max_occurrences=max_occ).collect()}
+    survives = f"n <= {max_occ}" + (" OR rn = 1" if keep == "first" else "")
     con = duckdb.connect()
     con.sql(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
-    want = {r[0]: (r[1], r[2]) for r in con.sql("""
+    want = {r[0]: (r[1], r[2]) for r in con.sql(f"""
         WITH ws AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS w
                     FROM documents),
         spans AS (
@@ -106,7 +109,7 @@ def test_span_dedup_matches_duckdb_oracle(spark, sf_dir):
                                     ORDER BY doc_id, span_id) AS rn
           FROM spans)
         SELECT doc_id, string_agg(span, ' ' ORDER BY span_id),
-               COUNT(*) FROM ranked WHERE n <= 1 OR rn = 1 GROUP BY doc_id
+               COUNT(*) FROM ranked WHERE {survives} GROUP BY doc_id
     """).fetchall()}
     assert got == want
 
@@ -140,21 +143,6 @@ def test_chunk_text_validation(spark):
         sp.chunk_text(df, max_tokens=0)
     with pytest.raises(ValueError):
         sp.chunk_text(df, max_tokens=4, stride=5)
-
-
-@pytest.mark.parametrize("keep,max_occ", [("first", 1), ("none", 2)])
-def test_skew_safe_variant_is_equivalent(spark, sf_dir, keep, max_occ):
-    """The aggregate-then-join skew_safe plan must return byte-identical
-    results to the window plan on the real documents table."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = {r.doc_id: (r.text, r.n_spans_kept)
-         for r in sp.span_dedup(df, span_tokens=8, keep=keep,
-                                max_occurrences=max_occ).collect()}
-    b = {r.doc_id: (r.text, r.n_spans_kept)
-         for r in sp.span_dedup(df, span_tokens=8, keep=keep,
-                                max_occurrences=max_occ,
-                                skew_safe=True).collect()}
-    assert a == b
 
 
 # ---------------------------------------------------------------- substring
@@ -240,26 +228,17 @@ def test_substring_dedup_validation(sub_docs):
 
 
 @pytest.mark.parametrize("keep", ["first", "none"])
-def test_substring_dedup_skew_safe_equivalent(spark, sf_dir, keep):
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = {r.doc_id: (r.text, r.n_tokens_removed)
-         for r in sp.substring_dedup(df, min_tokens=5, keep=keep).collect()}
-    b = {r.doc_id: (r.text, r.n_tokens_removed)
-         for r in sp.substring_dedup(df, min_tokens=5, keep=keep,
-                                     skew_safe=True).collect()}
-    assert a == b
-
-
-def test_substring_dedup_matches_duckdb_oracle(spark, sf_dir):
-    """Full differential on the real documents table (keep='first',
-    min_tokens=5): same sliding-gram + interval-union semantics
-    re-expressed in SQL, compared row-exactly."""
+def test_substring_dedup_matches_duckdb_oracle(spark, sf_dir, keep):
+    """Full differential on the real documents table (min_tokens=5):
+    same sliding-gram + interval-union semantics re-expressed in SQL,
+    compared row-exactly."""
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     got = {r.doc_id: (r.text, r.n_tokens_removed)
-           for r in sp.substring_dedup(df, min_tokens=5).collect()}
+           for r in sp.substring_dedup(df, min_tokens=5, keep=keep).collect()}
+    removed = "n > 1" + (" AND rn > 1" if keep == "first" else "")
     con = duckdb.connect()
     con.sql(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
-    want = {r[0]: (r[1], r[2]) for r in con.sql("""
+    want = {r[0]: (r[1], r[2]) for r in con.sql(f"""
         WITH ws AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS w
                     FROM documents),
         grams AS (
@@ -276,7 +255,7 @@ def test_substring_dedup_matches_duckdb_oracle(spark, sf_dir):
         covered AS (
           SELECT DISTINCT doc_id, CAST(p.i AS BIGINT) AS pos
           FROM ranked, LATERAL (SELECT unnest(range(start, start + 5)) AS i) p
-          WHERE n > 1 AND rn > 1),
+          WHERE {removed}),
         toks AS (
           SELECT doc_id, CAST(p.i AS BIGINT) AS pos, w[CAST(p.i AS INT) + 1] AS word
           FROM ws, LATERAL (SELECT unnest(range(0, len(w))) AS i) p),
