@@ -209,33 +209,21 @@ def zorder_write_bucketed(
 def pruning_stats(path: str, col: str) -> list[tuple]:
     """Per-file (min, max, rows) of ``col`` from parquet footers.
 
-    Reads ONLY metadata (pyarrow footer parse — no row data), the same
-    stats a Spark scan's file/row-group pruning consults. Driver-side by
-    design: one tuple per file, used by tests and layout audits to
-    measure what fraction of files a point/range predicate can skip.
+    Reads ONLY metadata (:func:`kafi_spark.sources.fsio.footer_range`,
+    the footer parse FS-topic watermarks use), the same stats a Spark
+    scan's file/row-group pruning consults. A file whose range is
+    unknown (a row group holding values without statistics) reads as
+    (None, None, rows), which :func:`pruned_fraction` never skips.
+    Python-side by design: one tuple per file, used by tests and layout
+    audits to measure what fraction of files a point/range predicate
+    can skip.
     """
     import glob as _glob
 
-    import pyarrow.parquet as _pq
+    from kafi_spark.sources.fsio import footer_range
 
-    out = []
-    for f in sorted(_glob.glob(f"{path}/part-*.parquet")):
-        md = _pq.ParquetFile(f).metadata
-        lo, hi, rows = None, None, 0
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            rows += g.num_rows
-            for ci in range(g.num_columns):
-                cc = g.column(ci)
-                if cc.path_in_schema != col or cc.statistics is None:
-                    continue
-                st = cc.statistics
-                if st.min is not None:
-                    lo = st.min if lo is None else min(lo, st.min)
-                if st.max is not None:
-                    hi = st.max if hi is None else max(hi, st.max)
-        out.append((lo, hi, rows))
-    return out
+    return [footer_range(f, col)
+            for f in sorted(_glob.glob(f"{path}/part-*.parquet"))]
 
 
 def pruned_fraction(stats: list[tuple], value) -> float:

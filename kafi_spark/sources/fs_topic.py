@@ -7,8 +7,10 @@ consumer-group state (kafi/fs/fs_admin.py:66-67, 206-261, 380-415; SURVEY
 §1.3). The Spark-native rendering:
 
 * topic data  = ``root/topics/<topic>/data`` parquet, directory-partitioned
-  by ``partition`` (partition pruning) — offset/timestamp min-max pruning
-  comes from parquet footers instead of filenames;
+  by ``partition`` (partition pruning) — the offset/timestamp min-max the
+  reference keeps in segment file names lives in each file's parquet
+  footer instead: scans prune on it, and ``watermarks`` reads the offset
+  range from it without a Spark job;
 * topic meta  = ``root/topics/<topic>/metadata.json`` (partitions, config);
 * group state = ``root/groups/<group>.json`` (committed offsets per
   topic-partition, kafi/fs/fs_admin.py:380-415).
@@ -28,11 +30,12 @@ from __future__ import annotations
 import datetime as _dt
 import fnmatch
 import json
+import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from kafi_spark.sources.fsio import io_for
+from kafi_spark.sources.fsio import LocalIO, footer_range, io_for, spark_visible
 from kafi_spark.sources.schema import MESSAGE_SCHEMA
 
 
@@ -166,17 +169,21 @@ class FSTopicStorage:
 
     def watermarks(self, topic: str) -> dict[int, tuple[int, int]]:
         """Per-partition (low, high) offsets; high = next offset to assign,
-        Kafka convention (kafi/fs/fs_admin.py:206-261). One metadata-cheap
-        aggregate over the parquet footer min/max. ``delete_records``
+        Kafka convention (kafi/fs/fs_admin.py:206-261). The reference reads
+        them from segment file names; here each data file's parquet footer
+        carries its offset min/max, read with pyarrow and no Spark job.
+        A Hadoop-FS root, or any file without offset statistics, falls
+        back to one min/max aggregate over the topic. ``delete_records``
         advances the persisted log-start / next-offset floors in topic
         metadata, which dominate when a partition's data is fully purged
         (the high watermark must survive a full truncation, like a broker's
         log start offset does)."""
-        # ONE metadata read: partitions() re-reads metadata.json, and
-        # this is the hottest metadata-plane path (every produce/consume
-        # with offsets lands here) — on an object-store root the extra
-        # read was a remote GET per call (round-9 review)
-        meta = self.metadata(topic)
+        return self._watermarks(topic, self.metadata(topic))
+
+    def _watermarks(self, topic: str, meta: dict) -> dict[int, tuple[int, int]]:
+        # takes the caller's metadata: produce reads metadata.json once
+        # for both the partition count and the floors — on an
+        # object-store root each read is a remote GET
         n = meta["partitions"]
         log_start = {int(p): o for p, o in meta.get("log_start", {}).items()}
         next_off = {int(p): o for p, o in meta.get("next_offset", {}).items()}
@@ -184,16 +191,60 @@ class FSTopicStorage:
             p: (log_start.get(p, 0), max(log_start.get(p, 0), next_off.get(p, 0)))
             for p in range(n)
         }
+        ranges = self._footer_offset_ranges(topic)
+        if ranges is None:
+            ranges = self._scan_offset_ranges(topic)
+        for p, (lo, hi) in ranges.items():
+            wm[p] = (max(lo, log_start.get(p, 0)),
+                     max(hi + 1, next_off.get(p, 0)))
+        return wm
+
+    def _footer_offset_ranges(self, topic: str) -> dict[int, tuple[int, int]] | None:
+        """{partition: (min, max) offset} from the data files' parquet
+        footers. Files are listed with Spark's hidden-file rule, so the
+        set is exactly what a topic scan reads. A footer is committed
+        atomically with its own rows, so there is no index to fall out
+        of step. None when the footers cannot answer for every file: a
+        Hadoop-FS root, an entry that is not a ``partition=<p>/``
+        directory of files, or a file without offset statistics."""
+        if not isinstance(self._io, LocalIO):
+            return None
+        data_dir = self._data_dir(topic)
+        if not os.path.isdir(data_dir):
+            return {}
+        ranges: dict[int, tuple[int, int]] = {}
+        for name in filter(spark_visible, os.listdir(data_dir)):
+            key, _, p = name.partition("=")
+            part_dir = os.path.join(data_dir, name)
+            if key != "partition" or not p.isdigit() or not os.path.isdir(part_dir):
+                return None
+            p = int(p)
+            for f in filter(spark_visible, os.listdir(part_dir)):
+                path = os.path.join(part_dir, f)
+                if os.path.isdir(path):
+                    return None
+                lo, hi, rows = footer_range(path, "offset")
+                if lo is None:
+                    if rows:
+                        return None
+                    continue
+                old = ranges.get(p)
+                ranges[p] = (lo, hi) if old is None else (
+                    min(old[0], lo), max(old[1], hi))
+        return ranges
+
+    def _scan_offset_ranges(self, topic: str) -> dict[int, tuple[int, int]]:
+        """{partition: (min, max) offset} from one min/max aggregate over
+        the topic's rows: the fallback where footers cannot answer."""
         df = self._read_raw(topic)
         if df is None:
-            return wm
-        for r in df.groupBy("partition").agg(
-            F.min("offset").alias("lo"), F.max("offset").alias("hi")
-        ).collect():
-            p = r["partition"]
-            wm[p] = (max(r["lo"], log_start.get(p, 0)),
-                     max(r["hi"] + 1, next_off.get(p, 0)))
-        return wm
+            return {}
+        return {
+            r["partition"]: (r["lo"], r["hi"])
+            for r in df.groupBy("partition").agg(
+                F.min("offset").alias("lo"), F.max("offset").alias("hi")
+            ).collect()
+        }
 
     #: sentinel accepted by delete_records: purge up to the high watermark
     OFFSET_END = -1
@@ -453,13 +504,12 @@ class FSTopicStorage:
         reassembles regardless of placement. One narrow projection —
         explode + substring, no extra pass.
         """
-        n = self.partitions(topic)
+        meta = self.metadata(topic)
+        n = meta["partitions"]
         cols = df.columns
-        out = df
-        if "key" not in cols:
-            out = out.withColumn("key", F.lit(None).cast("binary"))
-        if "headers" not in cols:
-            out = out.withColumn("headers", F.lit(None).cast(MESSAGE_SCHEMA["headers"].dataType))
+        key = F.col("key") if "key" in cols else F.lit(None).cast("binary")
+        headers = (F.col("headers") if "headers" in cols else
+                   F.lit(None).cast(MESSAGE_SCHEMA["headers"].dataType))
         if chunk_size_bytes is not None:
             if chunk_size_bytes <= 0:
                 # reference: chunk_size_bytes == 0 raises at producer
@@ -467,83 +517,83 @@ class FSTopicStorage:
                 # disabled (-1) case into None
                 raise ValueError(
                     f"chunk_size_bytes must be > 0, got {chunk_size_bytes}")
-            out = self._chunk_rows(out, int(chunk_size_bytes))
+            df = self._chunk_rows(
+                df.withColumns({"key": key, "headers": headers}),
+                int(chunk_size_bytes))
+            key, headers = F.col("key"), F.col("headers")
         if keep_partitions and "partition" in cols:
             # Reject out-of-range partitions at write time instead of writing
-            # NULL offsets (the hwm map lookup below misses silently). The
+            # NULL offsets (the hwm lookup below would miss silently). The
             # check rides the write pass — no extra job.
-            out = out.withColumn(
-                "partition",
-                F.when(
-                    (F.col("partition") >= 0) & (F.col("partition") < n),
-                    F.col("partition"),
-                ).otherwise(
-                    # coalesce: a NULL partition fell through to
-                    # raise_error(concat(.., NULL)) = raise_error(NULL) —
-                    # the job died with a null message carrying no
-                    # diagnostic (round-9 review)
-                    F.raise_error(
-                        F.concat(
-                            F.lit(f"partition out of range [0, {n}): "),
-                            F.coalesce(
-                                F.col("partition").cast("string"),
-                                F.lit("NULL (set a value or drop the "
-                                      "column to use the partitioner)"),
-                            ),
-                        )
-                    ).cast("int")
-                ),
+            partition = F.when(
+                (F.col("partition") >= 0) & (F.col("partition") < n),
+                F.col("partition"),
+            ).otherwise(
+                # coalesce: a NULL partition fell through to
+                # raise_error(concat(.., NULL)) = raise_error(NULL) —
+                # the job died with a null message carrying no
+                # diagnostic
+                F.raise_error(
+                    F.concat(
+                        F.lit(f"partition out of range [0, {n}): "),
+                        F.coalesce(
+                            F.col("partition").cast("string"),
+                            F.lit("NULL (set a value or drop the "
+                                  "column to use the partitioner)"),
+                        ),
+                    )
+                ).cast("int")
             )
         else:
             # hash-partition keyed rows; spread null keys uniformly
-            out = out.withColumn(
-                "partition",
-                F.when(
-                    F.col("key").isNotNull(), F.pmod(F.xxhash64("key"), F.lit(n))
-                )
+            partition = (
+                F.when(key.isNotNull(), F.pmod(F.xxhash64(key), F.lit(n)))
                 .otherwise(F.pmod(F.abs(F.monotonically_increasing_id()), F.lit(n)))
-                .cast("int"),
+                .cast("int")
             )
-        # the numeric-epoch test concerns the TIMESTAMP column's own
-        # dtype only (the old form scanned every column's decimal dtypes
-        # and rebuilt out.dtypes twice — round-9 review)
-        ts_dt = dict(out.dtypes).get("timestamp", "")
-        ts_is_numeric = ts_dt in (
-            "bigint", "int", "smallint", "tinyint", "double", "float"
-        ) or ts_dt.startswith("decimal")
         if not (keep_timestamps and "timestamp" in cols):
-            out = out.withColumn("timestamp", F.current_timestamp())
-        elif ts_is_numeric:
+            timestamp = F.current_timestamp()
+        elif (ts_dt := dict(df.dtypes)["timestamp"]) in (
+            "bigint", "int", "smallint", "tinyint", "double", "float"
+        ) or ts_dt.startswith("decimal"):
             # the reference's timestamp convention is epoch MILLIS for ANY
             # numeric dtype (kafi/storage_consumer.py:132-138); a raw
             # cast("timestamp") would read SECONDS — int/double epoch-millis
             # columns previously fell into that branch, a silent 1000x shift
-            out = out.withColumn(
-                "timestamp", F.timestamp_millis(F.col("timestamp").cast("long"))
-            )
+            timestamp = F.timestamp_millis(F.col("timestamp").cast("long"))
         else:
-            out = out.withColumn("timestamp", F.col("timestamp").cast("timestamp"))
-        out = out.withColumn("timestampType", F.lit(1))
-        wm = self.watermarks(topic)
-        # long-typed watermark literals: F.lit of a small Python int is
-        # IntegerType, so offset assignment ran in 32-bit arithmetic and
-        # overflowed (ANSI throw / silent wrap) once a partition crossed
-        # 2^31 records — MESSAGE_SCHEMA declares offset LONG for exactly
-        # the scale this module targets (round-9 review)
-        hwm = F.create_map(
-            *[x for p in range(n)
-              for x in (F.lit(p), F.lit(wm[p][1]).cast("long"))]
+            timestamp = F.col("timestamp").cast("timestamp")
+        # one projection for every derived column: each withColumn
+        # would be one more DataFrame to analyze
+        out = df.select(
+            key.alias("key"), "value", timestamp.alias("timestamp"),
+            partition.alias("partition"), headers.alias("headers"),
         )
+        wm = self._watermarks(topic, meta)
+        # the high-watermark lookup is ONE SQL array literal: one py4j
+        # call, where n F.lit columns cost at least one each. The ``L``
+        # suffix keeps offset arithmetic 64-bit: an IntegerType literal
+        # overflows (ANSI throw / silent wrap) once a partition passes
+        # 2^31 records, and MESSAGE_SCHEMA declares offset LONG.
+        # try_element_at, not element_at, keeps ``offset`` nullable, as
+        # in MESSAGE_SCHEMA and in the files already written
+        hwm = F.expr("try_element_at(array({}), partition + 1)".format(
+            ", ".join(f"{wm[p][1]}L" for p in range(n))))
         # ordering is load-bearing: Catalyst extracts the orderBy
         # expression into a Project BELOW the window's Exchange (verified
         # via explain), so monotonically_increasing_id() is evaluated
         # PRE-shuffle — offsets follow (input split, row position), i.e.
         # per-partition input order, not nondeterministic shuffle arrival
         w = W.partitionBy("partition").orderBy(F.monotonically_increasing_id())
-        out = (
-            out.withColumn("offset", hwm[F.col("partition")] + F.row_number().over(w) - 1)
-            .withColumn("topic", F.lit(topic))
-            .select([f.name for f in MESSAGE_SCHEMA.fields])
+        # the window goes on before the reordering select: its input keeps
+        # this frame's column order, which is the shuffled row layout
+        # (timestamp before partition: 3% fewer shuffle bytes on the
+        # perfbench topic log)
+        out = out.withColumn(
+            "offset", hwm + F.row_number().over(w) - 1
+        ).select(
+            "key", "value", F.lit(topic).alias("topic"), "partition",
+            "offset", "timestamp", F.lit(1).alias("timestampType"), "headers",
         )
         out.write.mode("append").partitionBy("partition").parquet(self._data_dir(topic))
 

@@ -11,8 +11,9 @@ uses. So the whole multi-backend matrix collapses to: plain local paths →
 session's JVM gateway.
 
 Only the *metadata plane* flows through here (topic metadata.json, group
-state, listings — a few KB per call); bulk data always goes through
-Spark's own parquet reader/writer, which handles every scheme natively.
+state, listings, parquet footers — a few KB per call); bulk data always
+goes through Spark's own parquet reader/writer, which handles every
+scheme natively.
 """
 
 from __future__ import annotations
@@ -161,3 +162,38 @@ class HadoopIO:
 def io_for(spark, root: str):
     """Pick the IO backend by path shape: ``scheme://`` → Hadoop, else os."""
     return HadoopIO(spark, root) if "://" in root else LocalIO()
+
+
+def spark_visible(name: str) -> bool:
+    """Spark's rule for which listed names a file scan reads
+    (``HadoopFSUtils.shouldFilterOutPathName``): ``_``-prefixed names
+    without ``=`` and ``.``-prefixed names are hidden, and so are
+    in-flight ``._COPYING_`` uploads. ``_SUCCESS``, ``_rewrite_tmp``,
+    ``_kafi_skip_index`` and ``.crc`` checksums never reach a scan."""
+    return not ((name.startswith("_") and "=" not in name)
+                or name.startswith(".") or name.endswith("._COPYING_"))
+
+
+def footer_range(path: str, col: str) -> tuple[object, object, int]:
+    """(min, max, rows) of ``col`` over one local parquet file, from its
+    footer alone (pyarrow metadata parse, no row data). A row group
+    whose ``col`` is all null adds nothing, as in a min/max aggregate.
+    min and max are None when the file holds no value of ``col``, or
+    when a row group holding values has no statistics for it (the range
+    is then unknown)."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    lo = hi = None
+    for i in range(md.num_row_groups):
+        g = md.row_group(i)
+        if g.num_rows == 0:
+            continue
+        st = next((g.column(c).statistics for c in range(g.num_columns)
+                   if g.column(c).path_in_schema == col), None)
+        if st is not None and st.has_min_max:
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        elif not (st is not None and st.null_count == g.num_rows):
+            return None, None, md.num_rows
+    return lo, hi, md.num_rows
