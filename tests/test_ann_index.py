@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from kafi_spark.functions import ann_index as ai
 from kafi_spark.functions.similarity import cosine_topk
+from tools.plans import formatted_plan
 
 
 @pytest.fixture(scope="module")
@@ -59,14 +60,8 @@ def test_partition_pruning_reads_only_probed_cells(spark, index_path):
     PARTITION filter (directory-level pruning), not a post-scan row
     filter. (inputFiles() reports the pre-pruning listing, so the
     physical plan is the honest witness.)"""
-    import contextlib
-    import io
-
     pruned = ai.probed_corpus(spark, index_path, [0, 3])
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pruned.explain("formatted")
-    txt = buf.getvalue()
+    txt = formatted_plan(pruned)
     pf = [l for l in txt.splitlines() if "PartitionFilters" in l]
     assert pf and "IN (0,3)" in pf[0].replace("cell#", "#")
     # and the rows really are only those cells'
@@ -146,16 +141,10 @@ def test_ivfpq_scores_are_exact_cosine(spark, emb, pq_index_path):
 
 
 def test_ivfpq_partition_pruning(spark, pq_index_path):
-    import contextlib
-    import io
-
     pruned = ai.probed_corpus(spark, pq_index_path, [1, 5])
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pruned.explain("formatted")
     assert any(
         "PartitionFilters" in l and "IN (1,5)" in l
-        for l in buf.getvalue().splitlines()
+        for l in formatted_plan(pruned).splitlines()
     )
 
 

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from kafi_spark.functions import dedup
 from tests.conftest import rows
+from tools.plans import formatted_plan
 
 BASE = "the quick brown fox jumps over the lazy dog and runs far away today"
 NEAR = "the quick brown fox jumps over the lazy dog and runs far away tonight"
@@ -89,9 +90,6 @@ def test_tokenize_runs_once_no_split_in_filter_conditions(docs):
     shingles post-explode guard, _sliding_grams' when() guard, and
     text_lines' inline-generator shape (a bound generator attribute
     gets an inferred size>0 filter; a complex child does not)."""
-    import contextlib
-    import io
-
     from kafi_spark.functions.spans import (
         boilerplate_filter, span_dedup, substring_dedup)
 
@@ -102,10 +100,7 @@ def test_tokenize_runs_once_no_split_in_filter_conditions(docs):
         "boiler": boilerplate_filter(docs, "text", "doc_id", sep=" "),
     }
     for name, frame in frames.items():
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            frame.explain("formatted")
-        bad = [ln.strip()[:120] for ln in buf.getvalue().splitlines()
+        bad = [ln.strip()[:120] for ln in formatted_plan(frame).splitlines()
                if ln.strip().startswith("Condition") and "split(" in ln]
         assert not bad, f"{name} re-tokenizes in a filter: {bad}"
 
@@ -132,19 +127,10 @@ def test_verify_jaccard_stays_out_of_join_condition(docs):
     that blocks the pushdown survives optimization (if a future Spark
     version prunes it, the condition reappears in the join and this
     fails)."""
-    import contextlib
-    import io
-
-    def fmt(df):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
-
     plans = {
-        "capped": fmt(dedup.ngram_jaccard_pairs(
+        "capped": formatted_plan(dedup.ngram_jaccard_pairs(
             docs, "text", "doc_id", threshold=0.5, max_df=100)),
-        "minhash": fmt(dedup.minhash_lsh_pairs(
+        "minhash": formatted_plan(dedup.minhash_lsh_pairs(
             docs, "text", "doc_id", threshold=0.5)),
     }
     for name, plan in plans.items():
@@ -812,18 +798,9 @@ def test_ngram_aqe_off_reapplies_protective_hints(spark):
     must get the protective SHUFFLE_HASH plan back (the static planner
     would otherwise broadcast the corpus-scale pair-counts aggregate it
     mis-estimates as tiny). Results must be identical either way."""
-    import contextlib
-    import io
-
     df = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "a b c d e g"), (3, "x y z w v u")],
         "doc_id long, text string")
-
-    def plan_of(frame):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            frame.explain("formatted")
-        return buf.getvalue()
 
     on = dedup.ngram_jaccard_pairs(df, "text", "doc_id", threshold=0.5,
                                    max_df=None)
@@ -831,7 +808,7 @@ def test_ngram_aqe_off_reapplies_protective_hints(spark):
     try:
         off = dedup.ngram_jaccard_pairs(df, "text", "doc_id", threshold=0.5,
                                         max_df=None)
-        assert "ShuffledHashJoin" in plan_of(off)
+        assert "ShuffledHashJoin" in formatted_plan(off)
         got_off = {(r.id_1, r.id_2) for r in off.collect()}
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -847,8 +824,6 @@ def test_dedup_against_union_batch_plans_verify_once(spark):
     duplicated right side a checkpoint leaf; pin the final plan's
     operator counts so a refactor can't silently reintroduce the
     re-execution."""
-    import contextlib
-    import io
     import re
 
     base = spark.createDataFrame(
@@ -861,10 +836,7 @@ def test_dedup_against_union_batch_plans_verify_once(spark):
             (F.col("doc_id") + 100).alias("doc_id"), "text"))
     out = dedup.dedup_against(batch, reference, threshold=0.9)
 
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
+    plan = formatted_plan(out)
     scans = len(re.findall(r"Scan parquet|Scan ExistingRDD", plan))
     exchanges = len(re.findall(r"\bExchange\b", plan))
     # pre-barrier the same query planned 4x these numbers; the verify

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafi_spark.functions import importance as imp
+from tools.plans import formatted_plan
 
 
 @pytest.fixture(scope="module")
@@ -45,9 +46,6 @@ def test_bucket_non_nullable_kills_inferred_md5_filters(spark):
     re-evaluated the per-gram hash a second time per occurrence. Pin
     both facts: the schema says non-nullable, and a join on bucket
     plans no md5-bearing Filter condition."""
-    import contextlib
-    import io
-
     df = spark.createDataFrame(
         [(1, "a b a c"), (2, "b c d e")], "doc_id long, text string")
     feats = imp.hashed_ngram_features(df, n_buckets=100, ns=(1, 2))
@@ -56,10 +54,7 @@ def test_bucket_non_nullable_kills_inferred_md5_filters(spark):
         F.col("id").cast("int").alias("bucket"),
         F.lit(0.5).alias("prob"))
     joined = feats.join(F.broadcast(ratios), "bucket")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        joined.explain("formatted")
-    bad = [ln for ln in buf.getvalue().splitlines()
+    bad = [ln for ln in formatted_plan(joined).splitlines()
            if "Condition" in ln and "md5" in ln]
     assert not bad, f"inferred not-null filter re-hashes grams: {bad}"
     # and the counts are the plain-expression counts (coalesce inert)

@@ -14,8 +14,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from bench import bench_queries, plan_text  # noqa: E402
+from bench import bench_queries  # noqa: E402
 from kafi_spark.session import get_spark  # noqa: E402
+from tools.plans import formatted_plan  # noqa: E402
 
 
 def main() -> None:
@@ -29,7 +30,7 @@ def main() -> None:
         df = qs[name](spark, sf_dir)
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(plan_text(df))
+            f.write(formatted_plan(df) + "\n")
         print(f"wrote {path}")
     spark.stop()
 

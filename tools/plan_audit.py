@@ -1,128 +1,99 @@
-"""Physical-plan audit across the driver contract.
+"""Physical-plan audit across every benched query.
 
-For every queries() entry, compiles the plan at the given sf_dir,
-counts scale-relevant physical operators, then EXECUTES the query
-(executor-side no-op action, nothing collected) to read codegen
-coverage from the AQE-final plan:
+For every ``bench.bench_queries`` entry (the 50 contract queries plus
+the bench-only twins), builds the query at the given sf_dir, reads
+its formatted plan once (``tools/plans.py``) and then EXECUTES it
+(executor-side no-op action, nothing collected) to read codegen spans
+from the AQE-final plan. Columns count operators, each once:
 
-* Exchange / Generate / Scan — plan-size blow-ups (an expensive subtree
-  embedded many times shows up as dozens of each; see the round-2 LSH
+* exch / gen / scan: plan-size blow-ups (an expensive subtree embedded
+  many times shows up as dozens of each; see the round-2 LSH
   verification incident)
-* CartesianProduct / BroadcastNestedLoopJoin — quadratic joins
-* BatchEvalPython — row-at-a-time Python UDFs (forbidden in hot paths;
-  ArrowEvalPython / MapInPandas are the sanctioned crossings)
-* wsc — distinct whole-stage-codegen span count of the executed plan
-  (-1 = execution failed), with a NO_CODEGEN tripwire for shuffling/
-  joining plans that compiled zero spans
+* smj / bhj / bnlj / cart: joins; CartesianProduct is quadratic
+* pyUDF: BatchEvalPython, a row-at-a-time Python UDF
+* reuse / inmem: subtree-sharing telemetry
+* wsc: whole-stage-codegen spans (distinct codegen ids) of the executed
+  plan, -1 when execution failed
 
-Usage: python tools/plan_audit.py [sf_dir]   (default sf0.01)
-Exits non-zero if any query trips a hard flag (cartesian, BatchEval,
-or plan-size runaway), so it can gate commits.
+Flags come from ``plans.RULES`` with the ``plans.BATCH`` limits:
+CARTESIAN, ROW_PYTHON_UDF, EXCHANGES>30, GENERATES>15 (nodes),
+NO_CODEGEN and RUNTIME_FAIL.
+
+The same plan's Filter/Join conditions and Output lists are then
+scanned for expensive expressions (``plans.HARD`` / ``plans.SOFT`` /
+``dup-expr``; see ``tools/plans.py``). Every hit is printed for
+adjudication; only a HARD hit that is not in ``plans.ALLOWLIST`` fails.
+
+Usage: python tools/plan_audit.py [sf_dir]   (default sf0.01; the commit
+gate runs it at sf0.001, about two minutes on 4 cores)
+Exits non-zero if any query trips a flag, fails to build, or has a hard
+expression hit, so it can gate commits.
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-#: hard ceilings — far above any sane plan here; a trip means a subtree
-#: is being re-embedded combinatorially, not that the query is "big"
-MAX_EXCHANGES = 60
-MAX_GENERATES = 30
+from tools import plans  # noqa: E402
+
+COLUMNS = ("exch", "gen", "scan", "wsc", "smj", "bhj", "bnlj", "cart",
+           "pyUDF", "reuse", "inmem")
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import __spark_entry__ as entry_mod
+    from bench import bench_queries
     from kafi_spark.session import get_spark
 
     spark = get_spark("plan_audit")
     spark.sparkContext.setLogLevel("ERROR")
 
-    failures = []
-    print(f"{'query':28s} {'exch':>4} {'gen':>4} {'scan':>4} {'wsc':>4} "
-          f"{'smj':>4} {'bhj':>4} {'bnlj':>4} {'cart':>4} {'pyUDF':>5} "
-          f"{'reuse':>5} {'inmem':>5}")
-    # every benched plan — the 50 driver-contract queries plus the
-    # bench-only twins — passes the same gates
-    from bench import PLAN_EXCHANGE_RE, bench_queries, plan_text
-
+    failures, hits, n_conditions = [], [], 0
+    print(f"{'query':28s} " + " ".join(f"{c:>5}" for c in COLUMNS))
     for name, fn in bench_queries(entry_mod).items():
         try:
             df = fn(spark, sf_dir)
-            p = plan_text(df)
+            nodes = plans.read_plan(plans.formatted_plan(df))
         except Exception as ex:  # noqa: BLE001
             print(f"{name:28s} ERROR: {ex}")
-            failures.append((name, str(ex)))
+            failures.append(name)
             continue
-        # Codegen coverage needs the EXECUTED plan: under AQE the
-        # pre-execution formatted plan is isFinalPlan=false and carries
-        # no "[codegen id : N]" annotations at all, so a static grep
-        # reads 0 for every query (r9 verdict #5 — the wsc gate was
-        # dead). foreach(no-op) executes the df's OWN queryExecution
-        # (a write-command wrapper executes a DIFFERENT plan and leaves
-        # the df unfinalized) while keeping every row on the executors —
-        # collect() here once meant pair-emitting queries materialized
-        # corpus-scale outputs driver-side at big sf_dirs. The span
-        # count is the number of DISTINCT codegen ids in the final plan.
+        c = plans.counts(nodes)
+        n_conditions += len(plans.condition_lines(nodes))
+        hits += [(name, *h) for h in plans.expression_hits(name, nodes)]
+        # Codegen spans need the EXECUTED plan: under AQE the
+        # pre-execution plan carries no codegen ids at all (r9 verdict
+        # #5, the wsc gate was dead). foreach(no-op) executes the df's
+        # OWN queryExecution (a write-command wrapper executes a
+        # DIFFERENT plan and leaves the df unfinalized) while keeping
+        # every row on the executors.
         try:
             df.foreach(lambda _row: None)
-            wsc = len(set(re.findall(r"\[codegen id : (\d+)\]",
-                                     plan_text(df))))
+            c["wsc"] = plans.counts(
+                plans.read_plan(plans.formatted_plan(df)))["wsc"]
         except Exception:  # noqa: BLE001 — audit the plan anyway
-            wsc = -1
-        c = {
-            "exch": len(re.findall(PLAN_EXCHANGE_RE, p)),
-            "gen": len(re.findall(r"\bGenerate\b", p)),
-            "scan": len(re.findall(r"Scan parquet|Scan ExistingRDD", p)),
-            "wsc": wsc,
-            "smj": len(re.findall(r"SortMergeJoin", p)),
-            "bhj": len(re.findall(r"BroadcastHashJoin", p)),
-            "bnlj": len(re.findall(r"BroadcastNestedLoopJoin", p)),
-            "cart": len(re.findall(r"CartesianProduct", p)),
-            "pyUDF": len(re.findall(r"BatchEvalPython", p)),
-            # subtree-sharing telemetry (the round-3 pipeline lesson: a
-            # repartition meant for ReuseExchange that never fires leaves
-            # scan-count evidence here)
-            "reuse": len(re.findall(r"ReusedExchange", p)),
-            "inmem": len(re.findall(r"InMemory(?:Relation|TableScan)", p)),
-        }
-        flags = []
-        if c["cart"]:
-            flags.append("CARTESIAN")
-        if c["pyUDF"]:
-            flags.append("ROW_PYTHON_UDF")
-        if c["exch"] > MAX_EXCHANGES:
-            flags.append(f"EXCHANGES>{MAX_EXCHANGES}")
-        if c["gen"] > MAX_GENERATES:
-            flags.append(f"GENERATES>{MAX_GENERATES}")
-        # codegen tripwire: a plan that shuffles or joins but compiled
-        # ZERO whole-stage-codegen spans has fallen off the JVM fast
-        # path (interpreted projections / object aggregates end to
-        # end) — that is how a hot query silently loses codegen
-        if c["wsc"] == 0 and (c["exch"] or c["smj"] or c["bhj"]):
-            flags.append("NO_CODEGEN")
-        # wsc == -1 means the query COMPILED but failed during the
-        # foreach execution — without this flag the audit exited 0 and
-        # silently passed a runtime-broken query (r10 ADVICE: the -1 was
-        # only visible in the printed table, never in the exit code)
-        if c["wsc"] == -1:
-            flags.append("RUNTIME_FAIL")
-        line = (f"{name:28s} {c['exch']:>4} {c['gen']:>4} {c['scan']:>4} "
-                f"{c['wsc']:>4} {c['smj']:>4} {c['bhj']:>4} {c['bnlj']:>4} "
-                f"{c['cart']:>4} {c['pyUDF']:>5} {c['reuse']:>5} {c['inmem']:>5}")
+            c["wsc"] = -1
+        flags = plans.check(c, plans.BATCH)
+        line = f"{name:28s} " + " ".join(f"{c[k]!s:>5}" for k in COLUMNS)
         if flags:
             line += "   FLAG: " + ",".join(flags)
-            failures.append((name, ",".join(flags)))
-        print(line)
+            failures.append(name)
+        print(line, flush=True)
 
-    if failures:
-        print(f"\n{len(failures)} flagged: {[n for n, _ in failures]}")
+    hard = [h for h in hits if h[2] == "hard"]
+    print(f"\nscanned {n_conditions} condition lines")
+    for sev in ("soft", "hard"):
+        found = [h for h in hits if h[2] == sev]
+        if found:
+            print(f"\n{len(found)} {sev} expression hits:")
+            for q, cls, _, ln in found:
+                print(f"  {q:28s} {cls:14s} {ln}")
+    if failures or hard:
+        print(f"\n{len(failures)} flagged: {failures}; {len(hard)} hard hits")
         return 1
     print("\nall plans clean")
     return 0

@@ -1,12 +1,11 @@
 """Profile one bench query end-to-end with per-stage task/CPU/shuffle stats.
 
 Usage: python tools/profile_query.py <bench-query-name>
+Reads the tables under $SPARK_GRAFT_SF_DIR (default sf0.1).
 """
-import json
 import os
 import sys
 import time
-import urllib.request
 
 # derive the repo from __file__ so a worktree copy profiles ITS OWN
 # tree during a same-host A/B, not the main checkout's
@@ -15,12 +14,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry_mod
 from bench import bench_queries
 from kafi_spark.session import get_spark
+from tools.plans import rest_get
+from tools.scale_probe import SF01
 
 spark = get_spark("profile_query", extra_conf={
     "spark.ui.enabled": "true", "spark.ui.port": "0",
     "spark.ui.retainedStages": "100000"})
 qs = bench_queries(entry_mod)
-sf_dir = "/root/testdata/sf0.1"
+sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF01)
 qs["scalar_stats"](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
 name = sys.argv[1] if len(sys.argv) > 1 else "pipeline_dupheavy_exact"
@@ -29,11 +30,7 @@ df = qs[name](spark, sf_dir)
 df.write.format("noop").mode("overwrite").save()
 print(f"{name} wall={time.time()-t0:.2f}s")
 
-ui = spark.sparkContext.uiWebUrl
-app = spark.sparkContext.applicationId
-with urllib.request.urlopen(
-        f"{ui}/api/v1/applications/{app}/stages?status=complete") as r:
-    stages = json.loads(r.read())
+stages = rest_get(spark, "stages?status=complete")
 tot_cpu = 0.0
 for st in sorted(stages, key=lambda s: s["stageId"]):
     cpu = st.get("executorCpuTime", 0) / 1e9

@@ -22,15 +22,15 @@ Run: ``python tools/scale_probe.py`` (writes BENCH_sf1.json).
 
 from __future__ import annotations
 
-import io
 import json
 import os
-import re
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from tools import plans  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
 SF1 = os.path.join(REPO, "var", "sf1")
@@ -126,17 +126,11 @@ def _diag_module(name: str):
 
 
 def _plan_counts(df) -> dict:
-    buf = io.StringIO()
-    import contextlib
-
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    s = buf.getvalue()
-    return {
-        "exchanges": len(re.findall(r"\bExchange\b", s)),
-        "broadcast_joins": len(re.findall(r"BroadcastHashJoin", s)),
-        "smj": len(re.findall(r"SortMergeJoin", s)),
-    }
+    """Plan-shape counts in BENCH_sf1.json's unit, two per node like
+    bench's ``exchanges``, so cached and new entries compare."""
+    c = plans.counts(plans.read_plan(plans.formatted_plan(df)))
+    return {"exchanges": 2 * c["exch"], "broadcast_joins": 2 * c["bhj"],
+            "smj": 2 * c["smj"]}
 
 
 def main() -> None:

@@ -11,25 +11,27 @@ This tool drives each twin end-to-end on a small corpus — the two
 genuinely-streaming operators via readStream + trigger(availableNow),
 the foreachBatch callables by direct epoch invocation (identical
 execution path; the callable never knows the difference) — and gates
-every Spark SQL execution recorded during the drive:
+every Spark SQL execution recorded during the drive with the rule table
+of ``tools/plans.py`` and its ``STREAM`` limits:
 
-* ROW_PYTHON_UDF — BatchEvalPython anywhere in an executed plan
-  (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandasWithState are
-  the sanctioned crossings);
+* ROW_PYTHON_UDF — BatchEvalPython anywhere in an executed plan;
 * CARTESIAN — CartesianProduct in an executed plan;
-* EXCHANGES>N — per-execution exchange ceiling (micro-batch plans are
-  small by construction; a blow-up means a subtree is re-embedding);
+* EXCHANGES>30 — per-execution exchange ceiling in nodes, the same
+  number of nodes the batch audit allows a whole pipeline;
 * NO_CODEGEN — an execution that shuffles or joins yet compiled zero
-  whole-stage-codegen spans, EXCEPT plans built on ObjectHashAggregate
-  (the DataSketches HLL/theta/KLL aggregates are object aggregates by
-  design and never enter codegen — exempting them keeps the gate
-  meaningful for everything else).
+  whole-stage-codegen spans, EXCEPT plans built on object aggregates or
+  state-store operators (the DataSketches HLL/theta/KLL aggregates never
+  enter codegen by design — exempting them keeps the gate meaningful
+  for everything else);
+* NO_EXECUTIONS — a twin that recorded no SQL execution was not driven.
 
 Executed plans come from the UI's SQL REST endpoint
-(``/api/v1/applications/<app>/sql?details=true&planDescription=true``)
-— the same final-plan source the batch audit's wsc gate reads, one
-HTTP GET per twin. Exchange counts are taken from the ``== Final Plan
-==`` slice so AQE's initial-plan echo isn't double-counted.
+(``/api/v1/applications/<app>/sql?details=true&planDescription=true``),
+whose ``planDescription`` is the formatted plan (the
+``spark.sql.ui.explainMode`` default), one HTTP GET per twin. Operators
+only found in AQE's ``== Initial Plan ==`` echo are not counted. The
+table's ``max_wsc`` is the most codegen spans (distinct codegen ids) in
+one execution, the same unit as the batch audit's ``wsc``.
 
 Usage: python tools/stream_audit.py [sf_dir]   (default sf0.001)
 Exits non-zero if any twin trips a hard flag.
@@ -39,63 +41,14 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 import sys
 import tempfile
-import urllib.request
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-#: per-EXECUTION ceiling — micro-batch bodies are tiny; the batch
-#: audit's 60 allows whole pipelines, a single streaming step never
-#: legitimately needs half of that
-MAX_EXCHANGES = 30
-
-
-def _final_slice(plan: str) -> str:
-    """The executed (AQE-final) section of a REST planDescription —
-    counting the whole string would double-count every operator that
-    also appears in the '== Initial Plan ==' echo."""
-    if "== Initial Plan ==" in plan:
-        return plan.split("== Initial Plan ==", 1)[0]
-    return plan
-
-
-def _gate_execution(plan: str) -> tuple[dict, list[str]]:
-    final = _final_slice(plan)
-    c = {
-        "exch": len(re.findall(r"\bExchange\b", final)),
-        "joins": len(re.findall(
-            r"SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin", final)),
-        "pyUDF": len(re.findall(r"BatchEvalPython", plan)),
-        "cart": len(re.findall(r"CartesianProduct", plan)),
-        # the REST planDescription is the SIMPLE plan string: codegen
-        # membership is the '*' operator prefix ('* HashAggregate (5)'),
-        # not the formatted mode's '[codegen id : N]' annotations —
-        # count starred operators
-        "wsc": len(re.findall(r"\* [A-Z]", final)),
-        # object aggregates (DataSketches HLL/theta/KLL) and streaming
-        # state-store operators (StreamingDeduplicate, StateStoreSave/
-        # Restore, applyInPandasWithState) are object-based by design
-        # and never enter whole-stage codegen — a micro-batch plan built
-        # around them is not "fallen off the fast path"
-        "objagg": len(re.findall(
-            r"ObjectHashAggregate|StreamingDeduplicate|StateStore"
-            r"|FlatMapGroupsInPandasWithState|SessionWindowStateStore",
-            final)),
-    }
-    flags = []
-    if c["pyUDF"]:
-        flags.append("ROW_PYTHON_UDF")
-    if c["cart"]:
-        flags.append("CARTESIAN")
-    if c["exch"] > MAX_EXCHANGES:
-        flags.append(f"EXCHANGES>{MAX_EXCHANGES}")
-    if (c["exch"] or c["joins"]) and c["wsc"] == 0 and not c["objagg"]:
-        flags.append("NO_CODEGEN")
-    return c, flags
+from tools import plans  # noqa: E402
 
 
 class _SqlStore:
@@ -103,22 +56,15 @@ class _SqlStore:
 
     def __init__(self, spark):
         self.spark = spark
-        self.url = (f"{spark.sparkContext.uiWebUrl}/api/v1/applications/"
-                    f"{spark.sparkContext.applicationId}/sql"
-                    f"?details=true&planDescription=true&length=100000")
         self.seen = -1
 
-    def _fetch(self) -> list[dict]:
-        self.spark._jsc.sc().listenerBus().waitUntilEmpty()
-        with urllib.request.urlopen(self.url) as resp:
-            return json.load(resp)
-
     def mark(self) -> None:
-        execs = self._fetch()
-        self.seen = max((e["id"] for e in execs), default=-1)
+        self.new_executions()
 
     def new_executions(self) -> list[dict]:
-        execs = [e for e in self._fetch() if e["id"] > self.seen]
+        execs = plans.rest_get(
+            self.spark, "sql?details=true&planDescription=true&length=100000")
+        execs = [e for e in execs if e["id"] > self.seen]
         self.seen = max((e["id"] for e in execs), default=self.seen)
         return execs
 
@@ -348,18 +294,14 @@ def main() -> int:
             execs = store.new_executions()
             agg = {"execs": len(execs), "max_exch": 0, "max_wsc": 0,
                    "pyUDF": 0, "cart": 0}
-            flags: set[str] = set()
+            flags = set(plans.check({"execs": len(execs)}, plans.STREAM))
             for e in execs:
-                c, f = _gate_execution(e.get("planDescription", ""))
+                c = plans.counts(plans.read_plan(e.get("planDescription", "")))
                 agg["max_exch"] = max(agg["max_exch"], c["exch"])
                 agg["max_wsc"] = max(agg["max_wsc"], c["wsc"])
                 agg["pyUDF"] += c["pyUDF"]
                 agg["cart"] += c["cart"]
-                flags.update(f)
-            if not execs:
-                # a twin that recorded no SQL executions was not driven —
-                # the audit must not silently "pass" it
-                flags.add("NO_EXECUTIONS")
+                flags.update(plans.check(c, plans.STREAM))
             line = (f"{name:28s} {agg['execs']:>5} {agg['max_exch']:>8} "
                     f"{agg['max_wsc']:>7} {agg['pyUDF']:>5} {agg['cart']:>4}")
             if flags:
