@@ -118,10 +118,11 @@ def corpus_report(
     Verbosity note: values are STRINGS (like :func:`profile_table`) so
     one schema carries counts, ratios, and language names alike.
     """
-    from kafi_spark.functions.text import gopher_rules, text_stats
+    from kafi_spark.functions.text import _with_gopher_rules, text_stats
 
+    bound, rules = _with_gopher_rules(df, text_col)
     gopher_ok = None
-    for rule in gopher_rules(F.col(text_col)).values():
+    for rule in rules.values():
         gopher_ok = rule if gopher_ok is None else (gopher_ok & rule)
     # ONE projection carries stats + the gopher flag + the group column
     # (keep_cols) — no second scan, no corpus-scale join for row-local
@@ -129,8 +130,9 @@ def corpus_report(
     # once per aggregation section below (narrow numeric rows, the
     # sanctioned barrier the streaming twin also uses)
     j = text_stats(
-        df.withColumn("__gopher", gopher_ok), text_col, id_col,
+        bound.withColumn("__gopher", gopher_ok), text_col, id_col,
         keep_cols=("__gopher", *((group_col,) if group_col else ())),
+        stop_matches="__gstops",
     ).localCheckpoint()
 
     pa = lambda c, q: F.percentile_approx(c, F.lit(q), accuracy)

@@ -254,11 +254,16 @@ def rolling_hash_fingerprint(text: Column, base: int = 257, mod: int = (1 << 61)
 
 
 def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-               keep_cols: tuple[str, ...] = ()) -> DataFrame:
+               keep_cols: tuple[str, ...] = (),
+               stop_matches: str | None = None) -> DataFrame:
     """One-pass per-document text-analysis table: tokens, chars, fingerprint,
     quality features, language guess. ``keep_cols`` carries extra input
     columns through the projection (so callers needing stats PLUS their
-    own columns stay a single scan instead of a join back)."""
+    own columns stay a single scan instead of a join back).
+    ``stop_matches`` names an input column that already holds the
+    stopword matches of the trimmed, lowered text (the Gopher rules'
+    ``__gstops``); the stopword count is its size instead of a second
+    regex scan."""
     # Tokenize/regex ONCE (judge r6: this scan re-derived words via
     # independent regex passes — token_count's split, quality_features'
     # counts duplicated again inside quality_score, langid's markers).
@@ -294,7 +299,8 @@ def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         F.length(tt).cast("long").alias("__tchars"),
         F.regexp_count(tt, F.lit(PUNCT_CLASS_PAT))
         .cast("long").alias("__npunct"),
-        F.regexp_count(F.lower(tt), F.lit(STOPWORD_PAT))
+        (F.regexp_count(F.lower(tt), F.lit(STOPWORD_PAT))
+         if stop_matches is None else F.array_size(stop_matches))
         .cast("long").alias("__nstop"),
         F.regexp_count(tt, F.lit(DIGIT_CLASS_PAT))
         .cast("long").alias("__ndigit"),
@@ -550,17 +556,36 @@ def filter_blocklisted_domains(
 
 def gopher_rules(text: Column) -> dict[str, Column]:
     """The Gopher quality-rule predicates (Rae et al. 2021 §A1.1) as
-    named boolean Columns (True = the rule PASSES). Built on
-    :func:`quality_features` plus the ellipsis/bullet line checks; each
-    is a pure JVM expression.
+    named boolean Columns (True = the rule PASSES), each a pure JVM
+    expression.
 
     Rules: 50 ≤ words ≤ 100k; 3 ≤ mean word length ≤ 10; ≤ 30% of lines
     end with an ellipsis; ≤ 90% of lines start with a bullet; ≥ 80% of
     words contain an alphabetic character; ≥ 2 distinct stopwords
-    appear."""
-    feats = quality_features(text)
-    t = F.trim(text)
-    lines = F.split(text, "\n")
+    appear. On a DataFrame, :func:`_with_gopher_rules` evaluates the
+    same rules with their arrays split once per row."""
+    return _gopher_checks(*_gopher_arrays(text).values())
+
+
+#: the columns :func:`_with_gopher_rules` binds the rules' arrays to
+_GOPHER_ARRAYS = ("__gwords", "__glines", "__gstops")
+
+
+def _gopher_arrays(text: Column) -> dict[str, Column]:
+    """The arrays the Gopher rules read, by :data:`_GOPHER_ARRAYS` name:
+    the words, the lines, and the stopword matches of the lowered,
+    trimmed text (whose size is text_stats' stopword count)."""
+    return dict(zip(_GOPHER_ARRAYS, (
+        words_of(text),
+        F.split(text, "\n"),
+        F.regexp_extract_all(F.lower(F.trim(text)), F.lit(STOPWORD_PAT), 0),
+    )))
+
+
+def _gopher_checks(words: Column, lines: Column, stops: Column
+                   ) -> dict[str, Column]:
+    """:func:`gopher_rules` over its three arrays."""
+    n_words = F.size(words)
     n_lines = F.greatest(F.size(lines), F.lit(1)).cast("double")
     bullet = F.size(
         F.filter(lines, lambda l: F.trim(l).rlike(r"^[-*•]"))
@@ -568,11 +593,10 @@ def gopher_rules(text: Column) -> dict[str, Column]:
     ellipsis = F.size(
         F.filter(lines, lambda l: F.trim(l).rlike(r"(\.\.\.|…)$"))
     ).cast("double")
-    words = words_of(text)
     n_alpha_words = F.size(
         F.filter(words, lambda w: w.rlike(r"[A-Za-z]"))
     ).cast("double")
-    safe_words = F.greatest(F.size(words), F.lit(1)).cast("double")
+    safe_words = F.greatest(n_words, F.lit(1)).cast("double")
     # TRUE mean word length (Σ len(word) / words): quality_features'
     # avg_word_len divides TRIMMED CHARS (spaces included) by words,
     # which shifts the Gopher [3,10] band by ~+1 and misclassifies
@@ -585,21 +609,28 @@ def gopher_rules(text: Column) -> dict[str, Column]:
         ).cast("double")
         / safe_words
     )
-    n_distinct_stop = F.size(
-        F.array_distinct(
-            F.regexp_extract_all(
-                F.lower(t), F.lit(r"\b(?:the|and|of|to|in|a|is|it)\b"), 0
-            )
-        )
-    )
     return {
-        "word_count_ok": (feats["n_words"] >= 50) & (feats["n_words"] <= 100_000),
+        "word_count_ok": (n_words >= 50) & (n_words <= 100_000),
         "word_length_ok": (mean_word_len >= 3.0) & (mean_word_len <= 10.0),
         "ellipsis_ok": (ellipsis / n_lines) <= 0.3,
         "bullet_ok": (bullet / n_lines) <= 0.9,
         "alpha_ok": (n_alpha_words / safe_words) >= 0.8,
-        "stopwords_ok": n_distinct_stop >= 2,
+        "stopwords_ok": F.size(F.array_distinct(stops)) >= 2,
     }
+
+
+def _with_gopher_rules(df: DataFrame, text_col: str
+                       ) -> tuple[DataFrame, dict[str, Column]]:
+    """``df`` plus the rules' arrays (:func:`_gopher_arrays`) bound in
+    one projection, and the rules over those columns. Inline, the rules
+    split the text into words four times and into lines three times,
+    inside lambdas and ``AND`` chains where codegen's subexpression
+    elimination does not reach. CollapseProject does not inline an
+    expensive column its consumer reads more than once, so the binding
+    projection stays and each split runs once per row."""
+    arrays = _gopher_arrays(F.col(text_col))
+    bound = df.select("*", *[c.alias(n) for n, c in arrays.items()])
+    return bound, _gopher_checks(*map(F.col, _GOPHER_ARRAYS))
 
 
 def gopher_filter(
@@ -608,13 +639,14 @@ def gopher_filter(
     """Keep documents passing ALL Gopher quality rules.
     ``keep_flags=True`` instead appends the per-rule boolean columns
     (for auditing which rule rejects what) without filtering."""
-    rules = gopher_rules(F.col(text_col))
+    from kafi_spark.functions.dedup import _filter_materialized
+
+    bound, rules = _with_gopher_rules(df, text_col)
     if keep_flags:
-        out = df
-        for name, col in rules.items():
-            out = out.withColumn(name, col)
-        return out
+        return bound.withColumns(rules).drop(*_GOPHER_ARRAYS)
     cond = None
     for col in rules.values():
         cond = col if cond is None else (cond & col)
-    return df.filter(cond)
+    # fenced: a plain filter is pushed below the binding projection with
+    # the arrays substituted back into every rule
+    return _filter_materialized(bound, cond, df.columns)

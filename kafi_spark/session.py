@@ -24,6 +24,18 @@ def get_spark(
     local[32] and the test scale factors, 32 post-shuffle partitions keep
     every partition in memory; on a real cluster AQE coalescing makes the
     static number mostly irrelevant (it only caps initial parallelism).
+
+    ``spark.sql.codegen.cache.maxEntries`` (compiled generated classes,
+    an LRU) is 2500, not Spark's 100. One ``curate_documents_extended``
+    pass needs 121 distinct classes, so at 100 entries every warm pass
+    missed on every lookup: ~104 classes a pass went back through Janino
+    on the driver (0.5-0.8 s) and then through the JIT. Counted with an
+    unbounded cache on a 4-core local session: one curation pass (the
+    perfbench corpus) compiles 121 classes; one ``bench.py`` sweep at
+    sf0.001 (75 queries, three runs each) compiles 1083. 2500 holds the
+    whole sweep with more than 2x margin. The conf is static (set before
+    the session starts, never at runtime); ``extra_conf`` still
+    overrides it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -49,6 +61,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("KAFI_SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # sized to the pipelines' generated classes: see the docstring
+        .config("spark.sql.codegen.cache.maxEntries", "2500")
         # wide-aggregate plans generate large classes; with the JVM default
         # 240m code cache the JIT shuts off mid-session and later queries
         # run interpreted (observed 10-30x slowdowns). 1g + flushing keeps

@@ -93,7 +93,7 @@ from kafi_spark.functions.bloom import (
     bloom_save_delta)
 from kafi_spark.functions.contamination import decontaminate
 from kafi_spark.functions.dedup import (
-    _band_keys, _lsh_join_from_bands, _parallelize)
+    _band_keys, _filter_materialized, _lsh_join_from_bands, _parallelize)
 from kafi_spark.functions.importance import (
     _band_case_expr, _validate_bands, lm_quality_score)
 from kafi_spark.functions.sketches import (
@@ -616,10 +616,12 @@ def curate_documents_stream(
     def step(batch_df, state):
         batch = _parallelize(batch_df)
 
-        # 1. quality gate (identical to batch stage 1)
+        # 1. quality gate (identical to batch stage 1, fenced the same way)
         stats = text_stats(batch, text_col, id_col)
-        kept = stats.filter(
-            (F.col("lang_guess") == lang) & (F.col("quality") >= min_quality)
+        kept = _filter_materialized(
+            stats,
+            (F.col("lang_guess") == lang) & (F.col("quality") >= min_quality),
+            stats.columns,
         )
 
         # 2. exact dedup: historical state + in-batch lowest-id window.
