@@ -132,7 +132,6 @@ def corpus_report(
     j = text_stats(
         bound.withColumn("__gopher", gopher_ok), text_col, id_col,
         keep_cols=("__gopher", *((group_col,) if group_col else ())),
-        stop_matches="__gstops",
     ).localCheckpoint()
 
     pa = lambda c, q: F.percentile_approx(c, F.lit(q), accuracy)

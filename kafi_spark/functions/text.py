@@ -254,16 +254,11 @@ def rolling_hash_fingerprint(text: Column, base: int = 257, mod: int = (1 << 61)
 
 
 def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-               keep_cols: tuple[str, ...] = (),
-               stop_matches: str | None = None) -> DataFrame:
+               keep_cols: tuple[str, ...] = ()) -> DataFrame:
     """One-pass per-document text-analysis table: tokens, chars, fingerprint,
     quality features, language guess. ``keep_cols`` carries extra input
     columns through the projection (so callers needing stats PLUS their
-    own columns stay a single scan instead of a join back).
-    ``stop_matches`` names an input column that already holds the
-    stopword matches of the trimmed, lowered text (the Gopher rules'
-    ``__gstops``); the stopword count is its size instead of a second
-    regex scan."""
+    own columns stay a single scan instead of a join back)."""
     # Tokenize/regex ONCE (judge r6: this scan re-derived words via
     # independent regex passes — token_count's split, quality_features'
     # counts duplicated again inside quality_score, langid's markers).
@@ -299,8 +294,7 @@ def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         F.length(tt).cast("long").alias("__tchars"),
         F.regexp_count(tt, F.lit(PUNCT_CLASS_PAT))
         .cast("long").alias("__npunct"),
-        (F.regexp_count(F.lower(tt), F.lit(STOPWORD_PAT))
-         if stop_matches is None else F.array_size(stop_matches))
+        F.regexp_count(F.lower(tt), F.lit(STOPWORD_PAT))
         .cast("long").alias("__nstop"),
         F.regexp_count(tt, F.lit(DIGIT_CLASS_PAT))
         .cast("long").alias("__ndigit"),
@@ -574,7 +568,7 @@ _GOPHER_ARRAYS = ("__gwords", "__glines", "__gstops")
 def _gopher_arrays(text: Column) -> dict[str, Column]:
     """The arrays the Gopher rules read, by :data:`_GOPHER_ARRAYS` name:
     the words, the lines, and the stopword matches of the lowered,
-    trimmed text (whose size is text_stats' stopword count)."""
+    trimmed text."""
     return dict(zip(_GOPHER_ARRAYS, (
         words_of(text),
         F.split(text, "\n"),
@@ -649,4 +643,5 @@ def gopher_filter(
         cond = col if cond is None else (cond & col)
     # fenced: a plain filter is pushed below the binding projection with
     # the arrays substituted back into every rule
+    # (tests/test_plan_shapes.py pins the plan)
     return _filter_materialized(bound, cond, df.columns)

@@ -33,8 +33,11 @@ def get_spark(
     unbounded cache on a 4-core local session: one curation pass (the
     perfbench corpus) compiles 121 classes; one ``bench.py`` sweep at
     sf0.001 (75 queries, three runs each) compiles 1083. 2500 holds the
-    whole sweep with more than 2x margin. The conf is static (set before
-    the session starts, never at runtime); ``extra_conf`` still
+    whole sweep with more than 2x margin. The cost: classes a session
+    never reuses (plans with one-off literals) stay loaded, and the
+    perfbench ``topic_shell`` workload, which needs under 100 classes,
+    measured 2-16% more CPU with it on 4 cores. The conf is static (set
+    before the session starts, never at runtime); ``extra_conf`` still
     overrides it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")

@@ -66,19 +66,42 @@ def test_curate_stream_gate_filter_reads_materialized_stats(
     _assert_gate_runs_no_regex(kept)
 
 
+def _gopher_doc(spark) -> DataFrame:
+    return spark.createDataFrame(
+        [(1, "the cat and the dog\n- a list item")],
+        "doc_id long, text string")
+
+
+def _assert_splits_once(frame: DataFrame) -> list:
+    """``frame``'s plan splits the text, and no projection writes a
+    split (or any other regex call) twice; returns the plan's nodes."""
+    nodes = plans.read_plan(plans.formatted_plan(frame))
+    outputs = [ln for n in nodes for ln in n.lines if ln.startswith("Output [")]
+    assert any("split(" in ln for ln in outputs)
+    assert [ln for ln in outputs if plans.duplicated_calls(ln)] == []
+    return nodes
+
+
 def test_corpus_report_splits_gopher_arrays_once(spark, monkeypatch):
     """The Gopher rules read the word and line arrays seven times; bound
     in a lower projection, no projection writes a split twice."""
     from kafi_spark.functions.profile import corpus_report
 
-    df = spark.createDataFrame(
-        [(1, "the cat and the dog\n- a list item")],
-        "doc_id long, text string")
-    stats = _first_checkpoint(monkeypatch, df, corpus_report)
-    nodes = plans.read_plan(plans.formatted_plan(stats))
-    outputs = [ln for n in nodes for ln in n.lines if ln.startswith("Output [")]
-    assert any("split(" in ln for ln in outputs)
-    assert [ln for ln in outputs if plans.duplicated_calls(ln)] == []
+    _assert_splits_once(
+        _first_checkpoint(monkeypatch, _gopher_doc(spark), corpus_report))
+
+
+def test_gopher_filter_reads_bound_arrays(spark):
+    """gopher_filter's Filter reads the bound word / line / stopword
+    arrays; a plain filter is pushed below the binding projection with
+    every split substituted back into the rules."""
+    from kafi_spark.functions.text import gopher_filter
+
+    nodes = _assert_splits_once(gopher_filter(_gopher_doc(spark)))
+    conds = [ln for ln in plans.condition_lines(nodes) if "__gwords" in ln]
+    assert len(conds) == 1, plans.condition_lines(nodes)
+    for cls in ("regex-split", "regex-fn"):
+        assert re.search(plans.HARD[cls], conds[0]) is None, conds[0]
 
 
 def test_warm_curation_pass_compiles_no_class(spark, sf_dir):
