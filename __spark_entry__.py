@@ -1558,21 +1558,31 @@ _DEDUP_SQL["dedup_fast_pairs"] = """
 """
 
 
-def q_ann_cosine_topk_exact(spark, sf_dir):
-    from kafi_spark.functions.similarity import cosine_topk
-
+def _ann_split(spark, sf_dir):
+    """(corpus, queries) of every ANN query: embeddings 0-9 query the
+    rest. ONE definition, shared with the bench-only ANN twins."""
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    out = cosine_topk(corpus, queries_df, k=5)
+    return emb.filter(F.col("vec_id") >= 10), queries_df
+
+
+def _ann_ranked(out):
+    """The contract columns of an ANN top-k: rank as long, score in
+    integer millionths."""
     return out.select(
         "query_id",
         "vec_id",
         F.col("rank").cast("long").alias("rank"),
         F.round(F.col("score") * 1_000_000).cast("long").alias("score_micro"),
     )
+
+
+def q_ann_cosine_topk_exact(spark, sf_dir):
+    from kafi_spark.functions.similarity import cosine_topk
+
+    return _ann_ranked(cosine_topk(*_ann_split(spark, sf_dir), k=5))
 
 
 def q_ann_cosine_topk(spark, sf_dir):
@@ -1592,18 +1602,8 @@ def q_ann_cosine_topk(spark, sf_dir):
 def q_ann_cosine_topk_lsh(spark, sf_dir):
     from kafi_spark.functions.similarity import cosine_topk_lsh
 
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    out = cosine_topk_lsh(corpus, queries_df, dim=64, k=5, n_planes=10, n_tables=6)
-    return out.select(
-        "query_id",
-        "vec_id",
-        F.col("rank").cast("long").alias("rank"),
-        F.round(F.col("score") * 1_000_000).cast("long").alias("score_micro"),
-    )
+    return _ann_ranked(cosine_topk_lsh(
+        *_ann_split(spark, sf_dir), dim=64, k=5, n_planes=10, n_tables=6))
 
 
 def _ann_ivf(spark, sf_dir, n_probe: int):
@@ -1613,19 +1613,8 @@ def _ann_ivf(spark, sf_dir, n_probe: int):
     to twin (only n_probe differs)."""
     from kafi_spark.functions.similarity import cosine_topk_ivf
 
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    out = cosine_topk_ivf(corpus, queries_df, k=5, n_cells=16,
-                          n_probe=n_probe)
-    return out.select(
-        "query_id",
-        "vec_id",
-        F.col("rank").cast("long").alias("rank"),
-        F.round(F.col("score") * 1_000_000).cast("long").alias("score_micro"),
-    )
+    return _ann_ranked(cosine_topk_ivf(
+        *_ann_split(spark, sf_dir), k=5, n_cells=16, n_probe=n_probe))
 
 
 def q_ann_cosine_topk_ivf(spark, sf_dir):

@@ -314,17 +314,9 @@ def bench_queries(entry_mod) -> dict:
     qs["dedup_ngram_capped"] = q_dedup_ngram_capped
 
     def q_ann_quantized(spark, sf_dir):
-        from pyspark.sql import functions as F
-
         from kafi_spark.functions.similarity import cosine_topk_quantized
-        from kafi_spark.session import read_table
 
-        emb = read_table(spark, sf_dir, "embeddings")
-        queries_df = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        corpus = emb.filter(F.col("vec_id") >= 10)
-        return cosine_topk_quantized(corpus, queries_df, k=5)
+        return cosine_topk_quantized(*entry_mod._ann_split(spark, sf_dir), k=5)
 
     qs["ann_cosine_topk_quantized"] = q_ann_quantized
 
@@ -377,17 +369,10 @@ def bench_queries(entry_mod) -> dict:
     qs["pipeline_dupheavy_minhash"] = q_pipeline_dupheavy_minhash
 
     def q_ann_pq(spark, sf_dir):
-        from pyspark.sql import functions as F
-
         from kafi_spark.functions.pq import cosine_topk_pq
-        from kafi_spark.session import read_table
 
-        emb = read_table(spark, sf_dir, "embeddings")
-        queries_df = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        corpus = emb.filter(F.col("vec_id") >= 10)
-        return cosine_topk_pq(corpus, queries_df, k=5, m_subspaces=8)
+        return cosine_topk_pq(*entry_mod._ann_split(spark, sf_dir), k=5,
+                              m_subspaces=8)
 
     qs["ann_cosine_topk_pq"] = q_ann_pq
 

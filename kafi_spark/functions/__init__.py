@@ -13,7 +13,6 @@ training-data pipeline needs:
                    (exact substring dedup, window plan)
 * ``bloom``      — Bloom-filter incremental dedup with persisted,
                    mergeable DataFrame state
-* ``graph``      — connected components, transitive-closure dedup policy
 * ``similarity`` — cosine top-k (exact / LSH / IVF / int8-quantized),
                    embedding near-dup pairs, SemDeDup semantic dedup
 * ``pq``         — product-quantization ANN (ADC scan + exact rescore)
@@ -33,9 +32,6 @@ training-data pipeline needs:
 * ``multimodal`` — binary-column plumbing: header decode, PCM
                    signal stats, BMP perceptual dHash, GIF frames
 * ``pipeline``   — the end-to-end curation composition
-* ``stages``     — resumable multi-stage execution (parquet commits,
-                   _SUCCESS markers, force-invalidation)
-* ``graph``      — (also) weighted dangling-aware PageRank
 * ``helpers``    — explode_normalize, dotted paths, ts/bytes coercions
 * ``quality``    — trainable fastText-shape quality classifier
                    (hashed n-grams → distributed logistic regression)

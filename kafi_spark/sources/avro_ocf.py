@@ -46,20 +46,10 @@ from dataclasses import dataclass
 from hashlib import md5
 from typing import Iterator
 
-from .avro import _Reader, _dec, _enc, avro_to_spark, parse_schema
+from .avro import _Reader, _dec, _enc, _write_long, avro_to_spark, parse_schema
 
 MAGIC = b"Obj\x01"
 _DEFAULT_BLOCK_RECORDS = 1000
-
-
-def _write_long(out, v: int) -> None:
-    # zigzag varint (same encoding the codec uses; re-stated here so the
-    # container layer has no dependency on codec internals beyond _enc)
-    v = (v << 1) ^ (v >> 63) if v < 0 else v << 1
-    while v & ~0x7F:
-        out.write(bytes([(v & 0x7F) | 0x80]))
-        v >>= 7
-    out.write(bytes([v]))
 
 
 def _deflate(data: bytes) -> bytes:

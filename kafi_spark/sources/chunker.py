@@ -7,29 +7,33 @@ Values larger than ``chunk_size`` split into N messages linked by headers
 Here the link columns are first-class; converting them to Kafka headers is a
 projection. Both directions are single JVM-side plans: chunk = sequence +
 explode + substring; dechunk = groupBy + sort + concat.
+
+This module owns the protocol: the chunk count and its key-suffix guard,
+the explode/slice (``explode_chunks``), the suffix (``key_suffix`` /
+``strip_key_suffix``), and the completeness rule and ordered concat
+(``reassemble``). ``chunk``/``dechunk`` are the column form;
+``FSTopicStorage.produce(chunk_size_bytes=)``/``consume(dechunk=True)``
+wrap the same functions in Kafka headers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 
-def chunk(df: DataFrame, value_col: str = "value", id_col: str = "key",
-          chunk_size: int = 1000) -> DataFrame:
-    """Split oversized binary values into numbered chunks.
-
-    Output: (chunk_key, chunked_message_id, chunk_number, number_of_chunks,
-    value). Single-chunk messages pass through with n_chunks=1 (the
-    reference only chunks when needed, kafi/chunker.py:29-34).
-    """
+def explode_chunks(df: DataFrame, value_col: str, chunk_size: int) -> DataFrame:
+    """One row per chunk of ``value_col``: the value is sliced in place and
+    ``chunked_message_id`` (uuid string), ``chunk_number`` (0-based) and
+    ``number_of_chunks`` are added. A null or short value is one chunk,
+    unchanged."""
     # F.length: BYTES for binary values, CHARS for strings — the same
     # unit substring slices in (review r7: octet_length counted bytes
     # while substring sliced characters, so multibyte strings produced
     # an oversized first chunk and empty tails). chunk_size is therefore
     # bytes for binary payloads (the Kafka case) and characters for
-    # strings.
-    size = F.length(F.col(value_col))
-    n_chunks = F.greatest(F.ceil(size / chunk_size), F.lit(1)).cast("int")
+    # strings. greatest() skips a null length: a null value is 1 chunk.
+    n_chunks = F.greatest(
+        F.ceil(F.length(F.col(value_col)) / chunk_size), F.lit(1)).cast("int")
     # the _NNNNNN key suffix holds 6 digits; lpad TRUNCATES past
     # 999999, colliding/corrupting chunk keys and breaking dechunk's
     # fixed-width suffix strip — fail loudly instead (round-8 ADVICE).
@@ -39,11 +43,11 @@ def chunk(df: DataFrame, value_col: str = "value", id_col: str = "key",
         n_chunks > 999_999,
         F.raise_error(
             F.concat(
-                F.lit("chunk(): value needs "),
+                F.lit("chunking: value needs "),
                 n_chunks.cast("string"),
                 F.lit(
                     " chunks, past the 999999 the 6-digit key suffix "
-                    "can number — increase chunk_size"
+                    "can number — increase the chunk size"
                 ),
             )
         ).cast("int"),
@@ -53,32 +57,33 @@ def chunk(df: DataFrame, value_col: str = "value", id_col: str = "key",
     # completeness filter then sees 2n chunks vs n expected and drops both.
     # uuid() is nondeterministic, so Catalyst won't push it through the
     # Generate below — one id per source row, shared by its chunks.
-    msg_id = F.expr("uuid()")
     return (
-        df.withColumn("__n", n_chunks)
-        .withColumn("chunked_message_id", msg_id)
-        .withColumn("chunk_number", F.explode(F.sequence(F.lit(0), F.col("__n") - 1)))
-        .select(
-            # key suffix _NNNNNN (kafi/helpers.py:356-376)
-            F.concat(
-                F.coalesce(F.col(id_col).cast("string"), F.lit("")),
-                F.lit("_"),
-                F.lpad(F.col("chunk_number").cast("string"), 6, "0"),
-            ).alias("chunk_key"),
-            "chunked_message_id",
-            "chunk_number",
-            F.col("__n").alias("number_of_chunks"),
-            F.substring(
-                F.col(value_col), F.col("chunk_number") * chunk_size + 1, chunk_size
-            ).alias(value_col),
-        )
+        df.withColumn("number_of_chunks", n_chunks)
+        .withColumn("chunked_message_id", F.expr("uuid()"))
+        .withColumn("chunk_number", F.explode(
+            F.sequence(F.lit(0), F.col("number_of_chunks") - 1)))
+        .withColumn(value_col, F.substring(
+            F.col(value_col), F.col("chunk_number") * chunk_size + 1, chunk_size))
     )
 
 
-def dechunk(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """Reassemble chunked messages (kafi/dechunker.py:15-75): group by
-    message id, order chunks, concatenate; incomplete groups are dropped
-    (the reference buffers until all chunks arrive)."""
+def key_suffix(chunk_number: Column) -> Column:
+    """``_NNNNNN``, the chunk key suffix (kafi/helpers.py:356-376)."""
+    return F.concat(F.lit("_"), F.lpad(chunk_number.cast("string"), 6, "0"))
+
+
+def strip_key_suffix(chunk_key: Column) -> Column:
+    """The original key: ``chunk_key`` without its 7-character suffix."""
+    return F.substring(chunk_key, F.lit(1), F.length(chunk_key) - 7)
+
+
+def reassemble(df: DataFrame, value_col: str, *aggs: Column) -> DataFrame:
+    """Group chunk rows (``chunked_message_id``, ``chunk_number``,
+    ``number_of_chunks``, ``value_col``) by message id and concatenate
+    each COMPLETE group's values in chunk order. Output:
+    ``chunked_message_id``, one column per extra aggregate in ``aggs``,
+    ``value_col``. Incomplete groups are dropped (the reference buffers
+    until all chunks arrive)."""
     # at-least-once tolerant (review r7): completeness counts DISTINCT
     # chunk numbers and the parts array is deduped — a redelivered
     # duplicate chunk used to fail the count check and silently DROP a
@@ -86,17 +91,6 @@ def dechunk(df: DataFrame, value_col: str = "value") -> DataFrame:
     # had the count passed). A group with conflicting payloads for one
     # chunk number (size(parts) != expect after dedup) is dropped as
     # incomplete rather than reassembled corrupt.
-    key_part = []
-    if "chunk_key" in df.columns:
-        # recover the original key: chunk_key = "<key>_NNNNNN"
-        # (kafi/helpers.py:356-376); originally-null keys come back ''
-        # (chunk() coalesced them — the suffix scheme can't tell them
-        # apart, same as the reference's dechunker)
-        key_part = [
-            F.any_value(
-                F.expr("substring(chunk_key, 1, length(chunk_key) - 7)")
-            ).alias("key")
-        ]
     return (
         df.groupBy("chunked_message_id")
         .agg(
@@ -107,7 +101,7 @@ def dechunk(df: DataFrame, value_col: str = "value") -> DataFrame:
             F.array_sort(F.array_distinct(
                 F.collect_list(F.struct("chunk_number", F.col(value_col).alias("v")))
             )).alias("__parts"),
-            *key_part,
+            *aggs,
         )
         .filter(
             (F.col("__got") == F.col("__expect"))
@@ -116,17 +110,46 @@ def dechunk(df: DataFrame, value_col: str = "value") -> DataFrame:
             # corrupt/forged numbering ({0,2} with nof=2) must drop as
             # incomplete, not reassemble a wrong payload: require the
             # exact 0..n-1 span (r10 ADVICE; numbering is 0-based by
-            # chunk()'s sequence(0, n-1))
+            # explode_chunks' sequence(0, n-1))
             & (F.col("__lo") == 0)
             & (F.col("__hi") == F.col("__expect") - 1)
         )
-        .select(
-            "chunked_message_id",
-            *(["key"] if key_part else []),
-            F.aggregate(
-                "__parts",
-                F.lit(b""),
-                lambda acc, p: F.concat(acc, p["v"]),
-            ).alias(value_col),
-        )
+        .withColumn(value_col, F.aggregate(
+            "__parts", F.lit(b""), lambda acc, p: F.concat(acc, p["v"])))
+        .drop("__expect", "__got", "__lo", "__hi", "__parts")
     )
+
+
+def chunk(df: DataFrame, value_col: str = "value", id_col: str = "key",
+          chunk_size: int = 1000) -> DataFrame:
+    """Split oversized binary values into numbered chunks.
+
+    Output: (chunk_key, chunked_message_id, chunk_number, number_of_chunks,
+    value). Single-chunk messages pass through with n_chunks=1 (the
+    reference only chunks when needed, kafi/chunker.py:29-34).
+    """
+    return explode_chunks(df, value_col, chunk_size).select(
+        F.concat(
+            F.coalesce(F.col(id_col).cast("string"), F.lit("")),
+            key_suffix(F.col("chunk_number")),
+        ).alias("chunk_key"),
+        "chunked_message_id",
+        "chunk_number",
+        "number_of_chunks",
+        value_col,
+    )
+
+
+def dechunk(df: DataFrame, value_col: str = "value") -> DataFrame:
+    """Reassemble chunked messages (kafi/dechunker.py:15-75): group by
+    message id, order chunks, concatenate; incomplete groups are dropped
+    (the reference buffers until all chunks arrive)."""
+    # recover the original key: chunk_key = "<key>_NNNNNN"
+    # (kafi/helpers.py:356-376); originally-null keys come back ''
+    # (chunk() coalesced them — the suffix scheme can't tell them
+    # apart, same as the reference's dechunker)
+    key_part = (
+        [F.any_value(strip_key_suffix(F.col("chunk_key"))).alias("key")]
+        if "chunk_key" in df.columns else []
+    )
+    return reassemble(df, value_col, *key_part)

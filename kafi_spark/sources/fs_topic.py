@@ -35,6 +35,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from kafi_spark.sources.chunker import (
+    explode_chunks, key_suffix, reassemble, strip_key_suffix)
 from kafi_spark.sources.fsio import LocalIO, footer_range, io_for, spark_visible
 from kafi_spark.sources.schema import MESSAGE_SCHEMA
 
@@ -612,170 +614,85 @@ class FSTopicStorage:
     @classmethod
     def _chunk_rows(cls, out: DataFrame, csb: int) -> DataFrame:
         """Producer-side chunk split (kafi/chunker.py:25-63) on a frame
-        already carrying ``key``/``value``/``headers``. Values with
-        length <= csb (and null values) pass through byte-identical."""
+        already carrying ``key``/``value``/``headers``: the
+        sources/chunker.py split, projected onto the wire headers. Values
+        with length <= csb (and null values) pass through byte-identical."""
         # 32-byte big-endian ints, the reference's header encoding
         # (int.to_bytes(32, "big")): unhex of a 64-digit hex pad
         int32be = lambda c: F.unhex(F.lpad(F.hex(c.cast("long")), 64, "0"))  # noqa: E731
         hdrs_t = MESSAGE_SCHEMA["headers"].dataType
-        n_chunks = F.when(
-            F.col("value").isNull(), F.lit(1)
-        ).otherwise(
-            F.greatest(F.ceil(F.length("value") / csb), F.lit(1))
-        ).cast("int")
-        # the _NNNNNN key suffix holds 6 digits; lpad TRUNCATES past
-        # 999999, colliding/corrupting chunk keys — fail loudly, same
-        # contract as sources/chunker.py (round-8 ADVICE). Row-level
-        # guard: the count is data-dependent
-        n_chunks = F.when(
-            n_chunks > 999_999,
-            F.raise_error(F.concat(
-                F.lit("produce(chunk_size_bytes=): value needs "),
-                n_chunks.cast("string"),
-                F.lit(" chunks, past the 999999 the 6-digit key suffix "
-                      "can number — increase chunk_size_bytes"),
-            )).cast("int"),
-        ).otherwise(n_chunks)
-        chunked = F.col("__n") > 1
+        chunked = F.col("number_of_chunks") > 1
+        links = (
+            # the reference stores the UUID's string form as UTF-8 bytes
+            F.encode("chunked_message_id", "UTF-8"),
+            int32be(F.col("number_of_chunks")),
+            int32be(F.col("chunk_number")),
+        )
         return (
-            out.withColumn("__n", n_chunks)
-            # uuid() is NONDETERMINISTIC on purpose: evaluated in the
-            # projection below the explode, once per SOURCE row, shared
-            # by its chunks (same pattern as sources/chunker.py); the
-            # reference stores the UUID's string form as UTF-8 bytes
-            .withColumn("__mid", F.encode(F.expr("uuid()"), "UTF-8"))
-            .withColumn(
-                "__i", F.explode(F.sequence(F.lit(0), F.col("__n") - 1)))
-            .withColumn(
-                "key",
-                F.when(
+            explode_chunks(out, "value", csb)
+            .withColumns({
+                "key": F.when(
                     chunked & F.col("key").isNotNull(),
-                    # _NNNNNN suffix, kafi/helpers.py:370-376; null keys
-                    # stay null (the reference's key_to_chunk_key)
-                    F.concat(
-                        F.col("key"),
-                        F.encode(
-                            F.concat(
-                                F.lit("_"),
-                                F.lpad(F.col("__i").cast("string"), 6, "0"),
-                            ),
-                            "UTF-8",
-                        ),
-                    ),
+                    # null keys stay null (the reference's key_to_chunk_key)
+                    F.concat(F.col("key"), F.encode(
+                        key_suffix(F.col("chunk_number")), "UTF-8")),
                 ).otherwise(F.col("key")),
-            )
-            .withColumn(
-                "headers",
-                F.when(
+                "headers": F.when(
                     chunked,
                     F.concat(
                         F.coalesce(F.col("headers"), F.array().cast(hdrs_t)),
-                        F.array(
-                            F.struct(
-                                F.lit(cls._CHUNK_HDRS[0]).alias("key"),
-                                F.col("__mid").alias("value")),
-                            F.struct(
-                                F.lit(cls._CHUNK_HDRS[1]).alias("key"),
-                                int32be(F.col("__n")).alias("value")),
-                            F.struct(
-                                F.lit(cls._CHUNK_HDRS[2]).alias("key"),
-                                int32be(F.col("__i")).alias("value")),
-                        ),
+                        F.array(*(
+                            F.struct(F.lit(h).alias("key"), v.alias("value"))
+                            for h, v in zip(cls._CHUNK_HDRS, links))),
                     ),
                 ).otherwise(F.col("headers")),
-            )
-            .withColumn(
-                "value",
-                F.when(
-                    chunked,
-                    F.substring("value", F.col("__i") * csb + 1, F.lit(csb)),
-                ).otherwise(F.col("value")),
-            )
-            .drop("__n", "__mid", "__i")
+            })
+            .drop("chunked_message_id", "chunk_number", "number_of_chunks")
         )
 
     @classmethod
     def _dechunk_frame(cls, df: DataFrame) -> DataFrame:
         """Consumer-side reassembly (kafi/dechunker.py:15-75): rows
-        carrying the chunk headers group by message id, order by chunk
-        number and concatenate; unchunked rows pass through untouched.
-        Incomplete groups are dropped (the reference buffers until every
-        chunk arrived — a bounded scan that cut a message in half has no
-        later poll to finish it). The reassembled message takes its
-        metadata (timestamp/partition/offset/topic, residual headers,
-        suffix-stripped key) from the max-(partition, offset) chunk — a
-        deterministic stand-in for the reference's "last chunk to
-        arrive". Redelivered duplicate chunks are tolerated; a group
-        with CONFLICTING payloads for one chunk number is dropped as
-        incomplete rather than reassembled corrupt (the
-        sources/chunker.py dechunk contract)."""
+        carrying the chunk headers go through sources/chunker.py's
+        ``reassemble``; unchunked rows pass through untouched. The
+        reassembled message takes its metadata (timestamp/partition/
+        offset/topic, residual headers, suffix-stripped key) from the
+        max-(partition, offset) chunk — a deterministic stand-in for the
+        reference's "last chunk to arrive"."""
         mid = cls._hdr(cls._CHUNK_HDRS[0])
         plain = df.filter(mid.isNull())
-        # chunk number from the 32-byte header: last 8 bytes as a long
-        cno = F.conv(
-            F.hex(F.substring(cls._hdr(cls._CHUNK_HDRS[2]), -8, 8)), 16, 10
-        ).cast("long")
-        nof = F.conv(
-            F.hex(F.substring(cls._hdr(cls._CHUNK_HDRS[1]), -8, 8)), 16, 10
-        ).cast("long")
+        # chunk number / count from the 32-byte header: last 8 bytes as a long
+        nof, cno = (
+            F.conv(F.hex(F.substring(cls._hdr(h), -8, 8)), 16, 10).cast("long")
+            for h in cls._CHUNK_HDRS[1:])
         meta = F.struct(
             "key", "topic", "partition", "offset", "timestamp",
             "timestampType", "headers")
-        grouped = (
-            df.filter(mid.isNotNull())
-            .select(
-                mid.alias("__mid"), cno.alias("__cno"), nof.alias("__nof"),
-                "value", meta.alias("__meta"),
-                F.struct("partition", "offset").alias("__ord"),
-            )
-            .groupBy("__mid")
-            .agg(
-                F.max("__nof").alias("__expect"),
-                F.count_distinct("__cno").alias("__got"),
-                F.min("__cno").alias("__lo"),
-                F.max("__cno").alias("__hi"),
-                F.array_sort(F.array_distinct(F.collect_list(
-                    F.struct(F.col("__cno"), F.col("value").alias("v"))
-                ))).alias("__parts"),
-                F.max_by("__meta", "__ord").alias("__meta"),
-            )
-            .filter(
-                (F.col("__got") == F.col("__expect"))
-                & (F.size("__parts") == F.col("__expect"))
-                # the COUNT checks above accept any n distinct chunk
-                # numbers; corrupt/forged numbering (chunks {0,2} with
-                # nof=2) must drop as incomplete, not reassemble a wrong
-                # payload — only the exact 0..n-1 span passes (r10
-                # ADVICE)
-                & (F.col("__lo") == 0)
-                & (F.col("__hi") == F.col("__expect") - 1)
-            )
-            .select(
-                # strip the 7-byte "_NNNNNN" suffix; null keys stayed null
-                F.expr(
-                    "substring(__meta.key, 1, length(__meta.key) - 7)"
-                ).alias("key"),
-                F.aggregate(
-                    "__parts", F.lit(b""), lambda acc, p: F.concat(acc, p["v"])
-                ).alias("value"),
-                F.col("__meta.topic").alias("topic"),
-                F.col("__meta.partition").alias("partition"),
-                F.col("__meta.offset").alias("offset"),
-                F.col("__meta.timestamp").alias("timestamp"),
-                F.col("__meta.timestampType").alias("timestampType"),
-                F.filter(
-                    F.col("__meta.headers"),
-                    # null-safe: isin() is NULL for a null header key
-                    # and F.filter drops NULL rows — a user header with
-                    # a null key (the schema allows it) must survive
-                    # dechunking like it survives an unchunked produce
-                    lambda h: h["key"].isNull()
-                    | ~h["key"].isin(*cls._CHUNK_HDRS),
-                ).alias("headers"),
-            )
+        chunks = df.filter(mid.isNotNull()).select(
+            mid.alias("chunked_message_id"), cno.alias("chunk_number"),
+            nof.alias("number_of_chunks"), "value", meta.alias("__meta"),
+            F.struct("partition", "offset").alias("__ord"),
+        )
+        grouped = reassemble(
+            chunks, "value", F.max_by("__meta", "__ord").alias("__meta")
+        ).select(
+            # null keys stayed null
+            strip_key_suffix(F.col("__meta.key")).alias("key"),
+            "value",
+            *(F.col(f"__meta.{c}").alias(c) for c in (
+                "topic", "partition", "offset", "timestamp", "timestampType")),
+            F.filter(
+                F.col("__meta.headers"),
+                # null-safe: isin() is NULL for a null header key
+                # and F.filter drops NULL rows — a user header with
+                # a null key (the schema allows it) must survive
+                # dechunking like it survives an unchunked produce
+                lambda h: h["key"].isNull()
+                | ~h["key"].isin(*cls._CHUNK_HDRS),
+            ).alias("headers"),
         )
         order = [f.name for f in MESSAGE_SCHEMA.fields]
-        return plain.select(order).unionByName(grouped.select(order))
+        return plain.select(order).unionByName(grouped)
 
     def _rewrite_partitions(self, topic: str, kept: DataFrame,
                             partitions: list[int] | None) -> int:
@@ -888,16 +805,20 @@ class FSTopicStorage:
         if group is not None and not start:
             committed = self.group_offsets(group).get(topic, {})
             start = {int(p): o for p, o in committed.items()}
-        if start:
-            wm = self.watermarks(topic)
+        if start or end_offsets:
             # descriptive guard (round-9 review): a bare wm[p] KeyError
             # named neither the topic nor the valid range, while the
-            # sibling mutator delete_records validates the same condition
-            for p in list(start) + list(end_offsets or {}):
+            # sibling mutator delete_records validates the same condition.
+            # End offsets alone need only the partition count: an unknown
+            # partition would otherwise match nothing in the filter below
+            # and silently leave every partition unbounded
+            wm = self.watermarks(topic) if start else range(self.partitions(topic))
+            for p in [*start, *(end_offsets or {})]:
                 if p not in wm:
                     raise ValueError(
                         f"partition {p} out of range for {topic} "
                         f"(has {len(wm)} partitions)")
+        if start:
             resolved = {
                 p: (o if o >= 0 else max(wm[p][1] + o, wm[p][0])) for p, o in start.items()
             }

@@ -601,11 +601,14 @@ def test_keep_partitions_null_partition_clear_error(storage, spark):
 
 def test_consume_offsets_out_of_range_clear_error(storage, spark):
     """Round-9 review: consume(offsets={bad: ..}) raised a bare
-    KeyError; it must name the topic and range like delete_records."""
+    KeyError; it must name the topic and range like delete_records. An
+    unknown end-offset partition alone used to bound nothing and return
+    every row."""
     storage.create("rng", partitions=2)
     storage.produce("rng", msgs(spark, ("a", "v")))
-    with pytest.raises(ValueError, match="out of range for rng"):
-        storage.consume("rng", offsets={5: 0}).collect()
+    for bound in ("offsets", "end_offsets"):
+        with pytest.raises(ValueError, match="out of range for rng"):
+            storage.consume("rng", **{bound: {5: 0}}).collect()
 
 
 def test_delete_records_hwm_survives_failed_rewrite(storage, spark, monkeypatch):
