@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession, functions as F
 
+from kafi_spark import localfs
+
 
 def get_spark(
     app_name: str = "kafi_spark",
@@ -39,6 +41,25 @@ def get_spark(
     measured 2-16% more CPU with it on 4 cores. The conf is static (set
     before the session starts, never at runtime); ``extra_conf`` still
     overrides it.
+
+    ``fs.file.impl`` is ``kafi_spark.localfs.CLASS``, Hadoop's checksummed
+    ``LocalFileSystem`` with permissions set through ``java.nio``. Without
+    the native Hadoop library the stock class forks ``/bin/chmod`` (~3 ms
+    each) for every file, ``.crc`` file and directory a local write
+    creates: one 5,000-row ``produce`` append into an 8-partition topic
+    forked 30 times, 150 partitioned writes forked 9,306 times (5,400
+    ``chmod 0644`` from file creates and the output committer, 3,900
+    ``chmod 0755`` from directory creates). It now forks none; modes,
+    ``.crc`` files and ``_SUCCESS`` markers are unchanged. The class is
+    set only when the JVM can load it: this call launches the JVM with
+    the class directory on ``spark.driver.extraClassPath``, or a JVM
+    already running loads it. Otherwise (a JVM started without it, a
+    build failure) Hadoop's default stays, which is only slower. Local
+    masters only: on a cluster the executors would need the class too.
+    Paths Hadoop opens through ``FileContext`` still get its ``LocalFs``
+    and fork: structured-streaming checkpoints and the rename in
+    ``sources/fsio.py:HadoopIO.write_bytes``. ``extra_conf`` may set
+    ``spark.hadoop.fs.file.impl`` back.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -75,7 +96,14 @@ def get_spark(
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
         )
     )
-    for k, v in (extra_conf or {}).items():
+    extra = extra_conf or {}
+    local = extra.get("spark.master", "local").startswith("local")
+    conf = localfs.spark_conf() if local else {}
+    for k, v in extra.items():
+        # the caller's classpath joins the class directory, never hides it
+        cp = k == "spark.driver.extraClassPath" and k in conf
+        conf[k] = f"{conf[k]}{os.pathsep}{v}" if cp else v
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
